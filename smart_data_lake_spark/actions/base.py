@@ -41,11 +41,12 @@ from smart_data_lake_spark.expectations import (
     Constraint,
     Expectation,
     apply_constraints,
-    compute_scope_all_metrics,
+    collect_write_metrics,
+    read_metrics,
     setup_observation,
     validate_expectations,
 )
-from smart_data_lake_spark.partitions import PartitionValues
+from smart_data_lake_spark.partitions import reduce_to_partitions, transform_partition_values
 from smart_data_lake_spark.save_modes import SaveMode
 from smart_data_lake_spark.subfeed import SparkSubFeed
 
@@ -298,61 +299,34 @@ class DataFrameAction(Action):
             df, obs = setup_observation(df, exps, f"{self.id}_{out_id}")
             if self.persist:
                 df = df.persist()
-            pvs = (mode_result.output_partition_values if mode_result else None) or []
             # transformers may REMAP partition values input→output (date →
-            # month aggregation etc. — GenericDfTransformerDef
-            # .transformPartitionValues, CopyActionTest 'date to month
+            # month aggregation etc. — CopyActionTest 'date to month
             # aggregation with partition value transformation'): the OUTPUT
             # side sees the mapped values; the input read above used the
-            # originals
-            for t in getattr(self, "transformers", None) or []:
-                mapper = getattr(t, "transform_partition_values", None)
-                if mapper is not None and pvs:
-                    pvs = list(mapper(pvs))
-            # reduce mode pvs to the WRITTEN object's declared partitions
-            # (with alternative_output_id the diff keys can be foreign to the
-            # direct output — an unreduced pv would aim delete_partitions at
-            # non-existent hive paths and corrupt OverwriteOptimized)
-            out_parts = list(getattr(out_do, "partitions", []) or [])
-            if pvs:
-                reduced = [
-                    PartitionValues.of({k: v for k, v in pv.as_dict.items() if k in out_parts})
-                    for pv in pvs
-                ]
-                pvs = list(dict.fromkeys(pv for pv in reduced if pv.as_dict))
+            # originals. They are then reduced to the WRITTEN object's
+            # declared partitions (with alternative_output_id the diff keys
+            # can be foreign to the direct output — an unreduced pv would aim
+            # delete_partitions at non-existent hive paths and corrupt
+            # OverwriteOptimized)
+            pvs = transform_partition_values(
+                getattr(self, "transformers", None),
+                (mode_result.output_partition_values if mode_result else None) or [],
+            )
+            pvs = reduce_to_partitions(pvs, getattr(out_do, "partitions", []) or [])
             assert isinstance(out_do, CanWriteDataFrame), f"({self.id}) {out_id} is not writable"
             if self.merge_options is not None and self.save_mode == SaveMode.MERGE:
                 metrics = out_do.write_dataframe(df, pvs, self.save_mode, merge_options=self.merge_options)
             else:
                 metrics = out_do.write_dataframe(df, pvs, self.save_mode)
-            obs_metrics = {}
-            if obs is not None:
-                try:
-                    obs_metrics = dict(obs.get)
-                except Exception:
-                    # Spark 4 Observation.get can fail when AQE rewrites the
-                    # observed node (e.g. the empty source side of a merge
-                    # join); the DO's own write metrics remain authoritative
-                    obs_metrics = {}
-            metrics = {**obs_metrics, **metrics}
-            if "count" not in metrics and "records_written" in metrics:
-                metrics["count"] = metrics["records_written"]
-            metrics["n_partitions"] = len(pvs) if pvs else None
-            if isinstance(out_do, CanCreateDataFrame):
-                metrics.update(compute_scope_all_metrics_lazy(out_do, spark, exps))
-                metrics.update(self._job_partition_metrics(out_do, spark, pvs, exps))
-            from smart_data_lake_spark.expectations import compute_unobservable_job_metrics
-
-            metrics.update(compute_unobservable_job_metrics(df, exps))
-            metrics.update(self._action_level_input_metrics(spark, dfs))
+            main_in = self.main_input_id if self.input_ids else None
+            metrics = collect_write_metrics(
+                spark, exps, obs, metrics, pvs, written=df, output=out_do,
+                main_input=dfs.get(main_in), main_input_do=self._do(main_in) if main_in else None,
+            )
             if getattr(out_do, "housekeeping_mode", None) is not None:
                 metrics.update(out_do.housekeeping_mode.post_write(spark, out_do))
             self.runtime_metrics[out_id] = metrics
-            warnings = validate_expectations(exps, metrics)
-            from smart_data_lake_spark.expectations import validate_job_partition_expectations
-
-            warnings += validate_job_partition_expectations(exps, metrics)
-            for w in warnings:
+            for w in validate_expectations(exps, metrics):
                 print(f"WARN ({self.id}/{out_id}): {w}")
             sf = SparkSubFeed(data_object_id=out_id, partition_values=pvs, metrics=metrics)
             # re-read from storage for downstream lineage (breakLineage after
@@ -402,14 +376,9 @@ class DataFrameAction(Action):
         ):
             # inject the transformer chain's pv mapping into the mode so its
             # diff runs in the output's partition grain
-            def _pv_chain(pvs: list) -> list:
-                for t in getattr(self, "transformers", None) or []:
-                    mapper = getattr(t, "transform_partition_values", None)
-                    if mapper is not None:
-                        pvs = list(mapper(pvs))
-                return pvs
-
-            self.execution_mode.partition_values_transform = _pv_chain
+            self.execution_mode.partition_values_transform = lambda pvs: transform_partition_values(
+                getattr(self, "transformers", None), pvs
+            )
         return self.execution_mode.apply(
             spark,
             self._do(self.main_input_id),
@@ -456,44 +425,25 @@ class DataFrameAction(Action):
             if in_id in self.input_ids_to_ignore_filter:
                 pvs = []  # inputIdsToIgnoreFilter: full data for this input
             # partition values only ever filter a DataObject's DECLARED
-            # partition columns (SubFeed.updatePartitionValues semantics):
-            # an unpartitioned input ignores run-level pv filters entirely,
-            # and pv entries are reduced to the input's partition columns
+            # partition columns: an unpartitioned input ignores run-level pv
+            # filters entirely
             do_parts = list(getattr(in_do, "partitions", []) or [])
-            if pvs and do_parts:
-                reduced = []
-                for pv in pvs:
-                    kept = {k: v for k, v in pv.as_dict.items() if k in do_parts}
-                    if kept:
-                        reduced.append(PartitionValues.of(kept))
-                # dedupe after reduction (several pvs may collapse onto one);
-                # PartitionValues is hashable on its canonical sorted tuple
-                pvs = list(dict.fromkeys(reduced))
-                # fail on reading a MISSING partition (CopyActionTest:530,
-                # DataObject.assertPartitionsExisting): enforced only when
-                # the pv keys form an INIT (prefix) of the declared partition
-                # columns — a non-prefix pv set (e.g. only the 2nd column)
-                # cannot be checked against hive paths and passes through
-                if phase == "exec" and isinstance(in_do, CanHandlePartitions):
-                    existing = None
-                    for pv in pvs:
-                        keys = set(pv.as_dict)
-                        # PartitionValues stores keys sorted — compare as a
-                        # SET against the leading partition columns
-                        if keys != set(do_parts[: len(keys)]):
-                            continue  # not an init of the partition columns
-                        if existing is None:
-                            existing = in_do.list_partitions(spark)
-                        prefix_match = any(
-                            all(str(e.as_dict.get(k)) == str(v) for k, v in pv.as_dict.items())
-                            for e in existing
-                        )
-                        if not prefix_match:
-                            raise AssertionError(
-                                f"({self.id}) partition {pv.as_dict} does not exist in {in_id}"
-                            )
-            elif pvs:
-                pvs = []
+            pvs = reduce_to_partitions(pvs, do_parts)
+            # fail on reading a MISSING partition (CopyActionTest:530,
+            # DataObject.assertPartitionsExisting): enforced only when the pv
+            # keys form an INIT (prefix) of the declared partition columns — a
+            # non-prefix pv set (e.g. only the 2nd column) cannot be checked
+            # against hive paths and passes through. Compared as strings:
+            # listed values are strings, given ones may be ints
+            if phase == "exec" and isinstance(in_do, CanHandlePartitions):
+                existing = None
+                for pv in (pv for pv in pvs if pv.is_init_of(do_parts)):
+                    if existing is None:
+                        existing = in_do.list_partitions(spark)
+                    if not any(
+                        all(str(e.as_dict.get(k)) == str(v) for k, v in pv.values) for e in existing
+                    ):
+                        raise AssertionError(f"({self.id}) partition {pv.as_dict} does not exist in {in_id}")
             streaming_mode = isinstance(self.execution_mode, SparkStreamingMode)
             stream_ids = self.streaming_input_ids or [self.main_input_id]
             if (
@@ -593,13 +543,7 @@ class DataFrameAction(Action):
                 # read side — objects some action WRITES are validated there
                 # instead (ValidateOnReadTest; one extra aggregate over what
                 # is being read anyway, no second scan of anything else)
-                from smart_data_lake_spark.expectations import (
-                    compute_read_metrics,
-                    validate_expectations as _validate,
-                )
-
-                read_metrics = compute_read_metrics(df, in_do.expectations)
-                for w in _validate(in_do.expectations, read_metrics):
+                for w in validate_expectations(in_do.expectations, read_metrics(df, in_do.expectations)):
                     print(f"WARN ({self.id}/{in_id} read): {w}")
             dfs[in_id] = df
         return dfs
@@ -618,34 +562,6 @@ class DataFrameAction(Action):
         except Exception:  # noqa: BLE001 — registry-less unit usage
             pass
         return ctx
-
-    def _job_partition_metrics(self, out_do, spark, pvs, expectations=None):
-        from smart_data_lake_spark.expectations import ExpectationScope, compute_job_partition_metrics
-
-        exps = expectations if expectations is not None else self.expectations
-        if not any(e.scope == ExpectationScope.JOB_PARTITION for e in exps):
-            return {}
-        partition_cols = list(getattr(out_do, "partitions", []) or [])
-        if not partition_cols and pvs:
-            partition_cols = list(pvs[0].keys)
-        df = out_do.get_dataframe(spark, pvs or None)
-        return compute_job_partition_metrics(df, exps, partition_cols)
-
-    def _action_level_input_metrics(self, spark, dfs):
-        """Input-side counts for action-level Completeness/TransferRate
-        expectations — an extra count job on the (filtered) main input, run
-        only when such an expectation is configured (the reference harvests
-        this from stage metrics; observation-free count keeps it simple)."""
-        from smart_data_lake_spark.expectations import CompletenessExpectation, TransferRateExpectation
-
-        metrics = {}
-        if any(isinstance(e, TransferRateExpectation) for e in self.expectations):
-            metrics["records_read"] = dfs[self.main_input_id].count()
-        if any(isinstance(e, CompletenessExpectation) for e in self.expectations):
-            in_do = self._do(self.main_input_id)
-            if isinstance(in_do, CanCreateDataFrame):
-                metrics["input_count_all"] = in_do.get_dataframe(spark).count()
-        return metrics
 
     def _write_streaming(self, spark, df, out_do, out_id) -> SparkSubFeed:
         mode = self.execution_mode
@@ -698,14 +614,6 @@ class DataFrameAction(Action):
                 "records_written": sum(_rows(p) for p in progress),
             }
         return SparkSubFeed(data_object_id=out_id, metrics=self.runtime_metrics.get(out_id, {}))
-
-
-def compute_scope_all_metrics_lazy(out_do, spark, expectations) -> dict[str, Any]:
-    from smart_data_lake_spark.expectations import ExpectationScope
-
-    if not any(e.scope == ExpectationScope.ALL for e in expectations):
-        return {}
-    return compute_scope_all_metrics(out_do.get_dataframe(spark), expectations)
 
 
 def now_utc() -> datetime.datetime:

@@ -22,7 +22,7 @@ import re
 import shutil
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -420,16 +420,7 @@ class SparkFileDataObject(
         mode = save_mode or self.save_mode
         self.init_write(df, partition_values)
         df = self._repartition_for_write(df)
-        # observe() records rows written without a second scan
-        # (reference uses a Spark listener, SparkStageMetricsListener.scala:52-154;
-        #  observation is the idiomatic python-side equivalent)
-        from pyspark.sql import Observation
-
-        obs = Observation(f"write_{self.id}")
-        df = df.observe(obs, F.count(F.lit(1)).alias("records_written"))
-        writer = df.write.format(self.format).options(**self._write_options())
-        if self.partitions:
-            writer = writer.partitionBy(*self.partitions)
+        writer, obs = self._observed_writer(df)
         if mode == SaveMode.OVERWRITE_PRESERVE_DIRECTORIES:
             # delete file contents but keep the directory tree (ACLs/mounts on
             # real filesystems survive, SDLSaveMode.scala OverwritePreserveDirectories)
@@ -491,6 +482,19 @@ class SparkFileDataObject(
         self._rename_output_files()
         self._apply_acl(df.sparkSession)
         return dict(obs.get)
+
+    def _observed_writer(self, df: DataFrame) -> tuple[DataFrameWriter, Observation]:
+        """Writer for `df` with this object's format, options and partition
+        columns, plus the observation that counts `records_written` while the
+        write runs — no second scan (the reference uses a Spark listener,
+        SparkStageMetricsListener.scala:52-154; observation is the idiomatic
+        python-side equivalent)."""
+        obs = Observation(f"write_{self.id}")
+        df = df.observe(obs, F.count(F.lit(1)).alias("records_written"))
+        writer = df.write.format(self.format).options(**self._write_options())
+        if self.partitions:
+            writer = writer.partitionBy(*self.partitions)
+        return writer, obs
 
     def write_dataframe_to_path(
         self, df: DataFrame, path: str, save_mode: SaveMode | str | None = None

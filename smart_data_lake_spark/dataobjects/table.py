@@ -146,18 +146,15 @@ class ParquetTableDataObject(SparkFileDataObject, CanMergeDataFrame):
         else:
             tmp = f"{parent}/sdl_{self.id}_tmp_{os.getpid()}"
         try:
-            writer = df.write.format(self.format).options(**self._write_options())
-            if self.partitions:
-                writer = writer.partitionBy(*self.partitions)
+            writer, obs = self._observed_writer(df)
             writer.mode("overwrite").save(tmp)
-            n = spark.read.format(self.format).load(tmp).count()
             if fs.is_dir(self.path):
                 if self.keep_snapshots > 0:
                     self._snapshot_current(fs)
                 else:
                     fs.delete(self.path, recursive=True)
             fs.move(tmp, self.path)
-            return {"records_written": n}
+            return dict(obs.get)
         finally:
             if fs.is_dir(tmp):
                 fs.delete(tmp, recursive=True)

@@ -6,18 +6,25 @@ violation raises with a PK trace), `dataobject/expectation/*.scala`
 UniqueKeyExpectation :51-75, scopes Job/JobPartition/All Expectation.scala:122-134)
 and the evaluation pipeline `dataobject/ExpectationValidation.scala:77-216`.
 
-Job-scope metrics ride on `df.observe()` — zero extra scans; All-scope runs a
-separate aggregation query against the written data.
+This module alone decides which query produces each expectation's metric
+(`collect_write_metrics`, `read_metrics`); what each scope costs per write:
+  Job          rides the write's observation — zero extra scans; only exact
+               UniqueKey (count DISTINCT) needs one extra aggregate
+  JobPartition one groupBy over the written partitions
+  All          one aggregate over the whole output, plus one query per
+               SQLQueryExpectation
+  TransferRate / Completeness  one count of the main input each
 """
 
 from __future__ import annotations
 
 import abc
+import math
 from dataclasses import dataclass
 from enum import Enum
-from typing import Any
+from typing import Any, ClassVar
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -75,20 +82,35 @@ class Expectation(abc.ABC):
     severity: Severity = Severity.ERROR
     scope: ExpectationScope = ExpectationScope.JOB
 
+    # whether the aggregates can ride the write observation (Spark's
+    # CollectMetrics rejects some, e.g. exact count DISTINCT)
+    observe_safe: ClassVar[bool] = True
+    # main-input rows an action-level ratio is taken over, counted by one
+    # extra job: JOB = as read by this run, ALL = the whole input object
+    input_scope: ClassVar[ExpectationScope | None] = None
+
     @abc.abstractmethod
-    def agg_expressions(self) -> list[Column]:
-        """Aggregate expressions producing this expectation's metric(s)."""
+    def aggregates(self) -> dict[str, Column]:
+        """This expectation's metrics: metric name -> aggregate expression."""
 
     def evaluate(self, metrics: dict[str, Any]) -> str | None:
         """Return violation message or None; default compares metric `name`
         against the `expectation` suffix."""
-        if self.expectation is None:
-            return None
-        value = metrics.get(self.name)
-        ok = _compare(value, self.expectation)
-        if ok:
+        return self._check(metrics.get(self.name))
+
+    def _check(self, value: Any) -> str | None:
+        if _compare(value, self.expectation):
             return None
         return f"expectation '{self.name}' failed: {value!r} !{self.expectation}"
+
+    def _check_ratio(self, num: Any, den: Any, missing: str, precision: int | None = None) -> str | None:
+        """Compare num / max(1, den), floored to `precision` decimals if set."""
+        if num is None or den is None:
+            return f"expectation '{self.name}': {missing}"
+        value = float(num) / max(1.0, float(den))
+        if precision is not None:
+            value = math.floor(value * 10**precision) / 10**precision
+        return self._check(value)
 
 
 @dataclass
@@ -97,8 +119,8 @@ class SQLExpectation(Expectation):
 
     aggExpression: str = "count(*)"
 
-    def agg_expressions(self):
-        return [F.expr(self.aggExpression).alias(self.name)]
+    def aggregates(self):
+        return {self.name: F.expr(self.aggExpression)}
 
 
 @dataclass
@@ -107,8 +129,8 @@ class CountExpectation(Expectation):
 
     name: str = "count"
 
-    def agg_expressions(self):
-        return [F.count(F.lit(1)).alias(self.name)]
+    def aggregates(self):
+        return {self.name: F.count(F.lit(1))}
 
 
 @dataclass
@@ -117,13 +139,9 @@ class SQLFractionExpectation(Expectation):
 
     condition: str = "true"
 
-    def agg_expressions(self):
-        return [
-            (
-                F.sum(F.when(F.expr(self.condition), F.lit(1)).otherwise(F.lit(0)))
-                / F.count(F.lit(1))
-            ).alias(self.name)
-        ]
+    def aggregates(self):
+        matching = F.sum(F.when(F.expr(self.condition), F.lit(1)).otherwise(F.lit(0)))
+        return {self.name: matching / F.count(F.lit(1))}
 
 
 @dataclass
@@ -142,12 +160,12 @@ class UniqueKeyExpectation(Expectation):
         # HyperLogLog variant can ride the write observation
         return self.approximate
 
-    def agg_expressions(self):
+    def aggregates(self):
         keys = F.struct(*[F.col(c) for c in (self.key_cols or [])])
         distinct = (
             F.approx_count_distinct(keys) if self.approximate else F.count_distinct(keys)
         )
-        return [(distinct / F.count(F.lit(1))).alias(self.name)]
+        return {self.name: distinct / F.count(F.lit(1))}
 
 
 @dataclass
@@ -159,20 +177,15 @@ class AvgCountPerPartitionExpectation(Expectation):
 
     name: str = "avgCountPerPartition"
 
-    def agg_expressions(self):
-        return [F.count(F.lit(1)).alias(self.name)]
+    def aggregates(self):
+        return {self.name: F.count(F.lit(1))}
 
     def evaluate(self, metrics: dict[str, Any]) -> str | None:
-        if self.expectation is None:
-            return None
-        n_parts = metrics.get("n_partitions") or 1
-        raw = metrics.get(self.name, metrics.get("count"))
-        if raw is None:
-            return f"expectation '{self.name}': no count metric available"
-        value = float(raw) / max(1, n_parts)
-        if _compare(value, self.expectation):
-            return None
-        return f"expectation '{self.name}' failed: {value!r} !{self.expectation}"
+        return self._check_ratio(
+            metrics.get(self.name, metrics.get("count")),
+            metrics.get("n_partitions") or 1,
+            "no count metric available",
+        )
 
 
 @dataclass
@@ -185,8 +198,8 @@ class SQLQueryExpectation(Expectation):
     code: str = ""
     scope: ExpectationScope = ExpectationScope.ALL
 
-    def agg_expressions(self):
-        return []
+    def aggregates(self):
+        return {}
 
     def compute_metrics(self, df: DataFrame) -> dict[str, Any]:
         view = f"_dl_exp_{self.name}"
@@ -206,22 +219,18 @@ class CompletenessExpectation(Expectation):
     scope: ExpectationScope = ExpectationScope.ALL
     precision: int = 4
 
-    def agg_expressions(self):
-        return [F.count(F.lit(1)).alias("countAll")]
+    input_scope: ClassVar[ExpectationScope | None] = ExpectationScope.ALL
+
+    def aggregates(self):
+        return {"countAll": F.count(F.lit(1))}
 
     def evaluate(self, metrics: dict[str, Any]) -> str | None:
-        if self.expectation is None:
-            return None
-        read = metrics.get("input_count_all")
-        written = metrics.get("countAll")
-        if read is None or written is None:
-            return f"expectation '{self.name}': input/output counts unavailable"
-        import math
-
-        value = math.floor(float(written) / max(1.0, float(read)) * 10**self.precision) / 10**self.precision
-        if _compare(value, self.expectation):
-            return None
-        return f"expectation '{self.name}' failed: {value!r} !{self.expectation}"
+        return self._check_ratio(
+            metrics.get("countAll"),
+            metrics.get("input_count_all"),
+            "input/output counts unavailable",
+            self.precision,
+        )
 
 
 @dataclass
@@ -233,87 +242,121 @@ class TransferRateExpectation(Expectation):
     expectation: str | None = "= 1"
     precision: int = 4
 
-    def agg_expressions(self):
-        return []
+    input_scope: ClassVar[ExpectationScope | None] = ExpectationScope.JOB
+
+    def aggregates(self):
+        return {}
 
     def evaluate(self, metrics: dict[str, Any]) -> str | None:
-        if self.expectation is None:
-            return None
-        read = metrics.get("records_read")
-        written = metrics.get("records_written", metrics.get("count"))
-        if read is None or written is None:
-            return f"expectation '{self.name}': records_read/records_written unavailable"
-        import math
-
-        value = math.floor(float(written) / max(1.0, float(read)) * 10**self.precision) / 10**self.precision
-        if _compare(value, self.expectation):
-            return None
-        return f"expectation '{self.name}' failed: {value!r} !{self.expectation}"
+        return self._check_ratio(
+            metrics.get("records_written", metrics.get("count")),
+            metrics.get("records_read"),
+            "records_read/records_written unavailable",
+            self.precision,
+        )
 
 
-def compute_job_partition_metrics(
-    df: DataFrame, expectations: list[Expectation], partition_cols: list[str]
-) -> dict[str, Any]:
-    """Scope=JobPartition: one metric per (expectation, partition value) —
-    a single groupBy over the written data (ExpectationValidation.scala:122-134).
-    Metric keys are `name#pcol=pval/...`, matching the reference's display."""
-    jp_exps = [e for e in expectations if e.scope == ExpectationScope.JOB_PARTITION]
-    if not jp_exps or not partition_cols:
-        return {}
-    exprs = [x for e in jp_exps for x in e.agg_expressions()]
-    rows = df.groupBy(*partition_cols).agg(*exprs).collect()
+def _aggregates(expectations: list[Expectation], **named: Column) -> dict[str, Column]:
+    """Aliased aggregates of `expectations`, deduplicated on metric name
+    (the first expression for a name wins)."""
+    for e in expectations:
+        for name, agg in e.aggregates().items():
+            named.setdefault(name, agg)
+    return {name: agg.alias(name) for name, agg in named.items()}
+
+
+def _aggregate(df: DataFrame, expectations: list[Expectation], group_by: list[str] | None = None) -> dict[str, Any]:
+    """The expectations' metrics as ONE aggregate query over `df`, plus one
+    query per SQLQueryExpectation. With `group_by` the aggregate runs once
+    per group and metric keys become `name#col=val/...`, matching the
+    reference's JobPartition display (ExpectationValidation.scala:122-134)."""
+    aggs = _aggregates(expectations)
     metrics: dict[str, Any] = {}
-    for r in rows:
-        suffix = "/".join(f"{c}={r[c]}" for c in partition_cols)
-        for e in jp_exps:
-            metrics[f"{e.name}#{suffix}"] = r[e.name]
+    if group_by:
+        if aggs:
+            for r in df.groupBy(*group_by).agg(*aggs.values()).collect():
+                suffix = "/".join(f"{c}={r[c]}" for c in group_by)
+                metrics.update({f"{name}#{suffix}": r[name] for name in aggs})
+        return metrics
+    if aggs:
+        metrics.update(df.agg(*aggs.values()).collect()[0].asDict())
+    for e in expectations:
+        if isinstance(e, SQLQueryExpectation):
+            metrics.update(e.compute_metrics(df))
     return metrics
 
 
-def validate_job_partition_expectations(
-    expectations: list[Expectation], metrics: dict[str, Any]
-) -> list[str]:
-    """Evaluate JobPartition-scope expectations once per partition metric."""
-    warnings: list[str] = []
-    errors: list[str] = []
-    for e in expectations:
-        if e.scope != ExpectationScope.JOB_PARTITION or e.expectation is None:
-            continue
-        for key, value in metrics.items():
-            if not key.startswith(f"{e.name}#"):
-                continue
-            if not _compare(value, e.expectation):
-                msg = f"expectation '{key}' failed: {value!r} !{e.expectation}"
-                (errors if e.severity == Severity.ERROR else warnings).append(msg)
-    if errors:
-        raise ExpectationValidationError("; ".join(errors))
-    return warnings
+def _scoped(expectations: list[Expectation], scope: ExpectationScope) -> list[Expectation]:
+    return [e for e in expectations if e.scope == scope]
 
 
 def setup_observation(
     df: DataFrame, expectations: list[Expectation], obs_name: str
-) -> tuple[DataFrame, Observation | None]:
-    """Attach job-scope expectation metrics to the write via observe().
-    Expectations whose aggregates Spark's CollectMetrics cannot host (exact
-    count DISTINCT — UniqueKeyExpectation.scala:44-47 documents exactly this
-    engine limit) are left out here and computed by
-    `compute_unobservable_job_metrics` as a separate aggregate."""
-    job_exps = [
-        e
-        for e in expectations
-        if e.scope == ExpectationScope.JOB and getattr(e, "observe_safe", True)
-    ]
-    exprs = [F.count(F.lit(1)).alias("count")]
-    seen = {"count"}
-    for e in job_exps:
-        for expr in e.agg_expressions():
-            alias = expr._jc.toString().split(" AS ")[-1].strip("`") if " AS " in expr._jc.toString() else e.name
-            if alias in seen:
-                continue
-            seen.add(alias)
-            exprs.append(expr)
+) -> tuple[DataFrame, Observation]:
+    """Attach the row count and the job-scope expectation metrics to the
+    write via observe(). Expectations whose aggregates Spark's CollectMetrics
+    cannot host (exact count DISTINCT — UniqueKeyExpectation.scala:44-47
+    documents exactly this engine limit) are left out here and computed by
+    `collect_write_metrics` as a separate aggregate."""
+    observable = [e for e in _scoped(expectations, ExpectationScope.JOB) if e.observe_safe]
     obs = Observation(obs_name)
-    return df.observe(obs, *exprs), obs
+    return df.observe(obs, *_aggregates(observable, count=F.count(F.lit(1))).values()), obs
+
+
+def collect_write_metrics(
+    spark: SparkSession,
+    expectations: list[Expectation],
+    obs: Observation,
+    write_metrics: dict[str, Any],
+    partition_values: list,
+    written: DataFrame,
+    output: Any,
+    main_input: DataFrame,
+    main_input_do: Any,
+) -> dict[str, Any]:
+    """Every metric of one action output: the observation of the write
+    (`setup_observation` on `written`), the DataObject's own write metrics,
+    and one extra query per scope that an expectation needs. `output` and
+    `main_input_do` are the written and the main input DataObject; reads
+    happen only when an expectation needs them and the object is readable."""
+    try:
+        observed = dict(obs.get)
+    except Exception:
+        # Spark 4 Observation.get can fail when AQE rewrites the observed
+        # node (e.g. the empty source side of a merge join); the DO's own
+        # write metrics remain authoritative
+        observed = {}
+    metrics = {**observed, **write_metrics}
+    if "count" not in metrics and "records_written" in metrics:
+        metrics["count"] = metrics["records_written"]
+    metrics["n_partitions"] = len(partition_values) if partition_values else None
+    readable_output = hasattr(output, "get_dataframe")
+    all_exps = _scoped(expectations, ExpectationScope.ALL)
+    if all_exps and readable_output:
+        metrics.update(_aggregate(output.get_dataframe(spark), all_exps))
+    jp_exps = _scoped(expectations, ExpectationScope.JOB_PARTITION)
+    partition_cols = list(getattr(output, "partitions", []) or []) or (
+        list(partition_values[0].keys) if partition_values else []
+    )
+    if jp_exps and readable_output and partition_cols:
+        jp_df = output.get_dataframe(spark, partition_values or None)
+        metrics.update(_aggregate(jp_df, jp_exps, group_by=partition_cols))
+    unobservable = [e for e in _scoped(expectations, ExpectationScope.JOB) if not e.observe_safe]
+    if unobservable:
+        metrics.update(_aggregate(written, unobservable))
+    input_scopes = {e.input_scope for e in expectations}
+    if ExpectationScope.JOB in input_scopes:
+        metrics["records_read"] = main_input.count()
+    if ExpectationScope.ALL in input_scopes and hasattr(main_input_do, "get_dataframe"):
+        metrics["input_count_all"] = main_input_do.get_dataframe(spark).count()
+    return metrics
+
+
+def read_metrics(df: DataFrame, expectations: list[Expectation]) -> dict[str, Any]:
+    """Metrics for validate-on-read: on the read side Job and All scope
+    collapse to the same thing — ONE aggregate over the frame being read
+    (ValidateOnReadTest; there is no write observation to ride on)."""
+    return _aggregate(df, [e for e in expectations if e.scope != ExpectationScope.JOB_PARTITION])
 
 
 def validate_expectations(
@@ -321,64 +364,24 @@ def validate_expectations(
     metrics: dict[str, Any],
 ) -> list[str]:
     """Evaluate all expectations; raise on Error severity, return warnings
-    (DataFrameActionImpl.scala:339-368)."""
+    (DataFrameActionImpl.scala:339-368). A JobPartition expectation is also
+    checked once per `name#partition` metric."""
     warnings: list[str] = []
     errors: list[str] = []
     for e in expectations:
-        msg = e.evaluate(metrics)
-        if msg is None:
+        if e.expectation is None:
             continue
-        (errors if e.severity == Severity.ERROR else warnings).append(msg)
+        msgs = [e.evaluate(metrics)]
+        if e.scope == ExpectationScope.JOB_PARTITION:
+            msgs += [
+                f"expectation '{key}' failed: {value!r} !{e.expectation}"
+                for key, value in metrics.items()
+                if key.startswith(f"{e.name}#") and not _compare(value, e.expectation)
+            ]
+        (errors if e.severity == Severity.ERROR else warnings).extend(m for m in msgs if m)
     if errors:
         raise ExpectationValidationError("; ".join(errors))
     return warnings
-
-
-def compute_scope_all_metrics(df: DataFrame, expectations: list[Expectation]) -> dict[str, Any]:
-    """Separate aggregation query for scope=All expectations."""
-    all_exps = [e for e in expectations if e.scope == ExpectationScope.ALL]
-    if not all_exps:
-        return {}
-    metrics: dict[str, Any] = {}
-    exprs = [x for e in all_exps for x in e.agg_expressions()]
-    if exprs:
-        metrics.update(df.agg(*exprs).collect()[0].asDict())
-    for e in all_exps:
-        if isinstance(e, SQLQueryExpectation):
-            metrics.update(e.compute_metrics(df))
-    return metrics
-
-
-def compute_unobservable_job_metrics(
-    df: DataFrame, expectations: list[Expectation]
-) -> dict[str, Any]:
-    """Separate aggregate for job-scope expectations that cannot ride the
-    write observation (exact count distinct). One extra aggregation job over
-    the written frame — only run when such an expectation exists."""
-    exps = [
-        e
-        for e in expectations
-        if e.scope == ExpectationScope.JOB and not getattr(e, "observe_safe", True)
-    ]
-    if not exps:
-        return {}
-    exprs = [x for e in exps for x in e.agg_expressions()]
-    return df.agg(*exprs).collect()[0].asDict()
-
-
-def compute_read_metrics(df: DataFrame, expectations: list[Expectation]) -> dict[str, Any]:
-    """Metrics for validate-on-read: on the read side Job and All scope
-    collapse to the same thing — ONE aggregate over the frame being read
-    (ValidateOnReadTest; there is no write observation to ride on)."""
-    exps = [e for e in expectations if e.scope != ExpectationScope.JOB_PARTITION]
-    metrics: dict[str, Any] = {}
-    exprs = [x for e in exps for x in e.agg_expressions()]
-    if exprs:
-        metrics.update(df.agg(*exprs).collect()[0].asDict())
-    for e in exps:
-        if isinstance(e, SQLQueryExpectation):
-            metrics.update(e.compute_metrics(df))
-    return metrics
 
 
 def _compare(value: Any, expectation: str) -> bool:

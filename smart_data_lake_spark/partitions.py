@@ -95,6 +95,29 @@ def diff_partition_values(
     return [pv for pv in input_pvs if pv not in out]
 
 
+def reduce_to_partitions(
+    partition_values: Iterable[PartitionValues], partition_cols: Iterable[str]
+) -> list[PartitionValues]:
+    """Keep only the `partition_cols` entries of each value
+    (SubFeed.updatePartitionValues): values left empty are dropped and
+    values that collapse onto the same partition are deduplicated, so an
+    unpartitioned DataObject gets no partition values at all."""
+    cols = set(partition_cols)
+    reduced = (PartitionValues.of({k: v for k, v in pv.values if k in cols}) for pv in partition_values)
+    return list(dict.fromkeys(pv for pv in reduced if pv.values))
+
+
+def transform_partition_values(transformers: Iterable[Any] | None, partition_values: list) -> list:
+    """Map partition values through each transformer's
+    `transform_partition_values` in chain order (GenericDfTransformerDef
+    .transformPartitionValues — e.g. date -> month aggregation)."""
+    for t in transformers or []:
+        mapper = getattr(t, "transform_partition_values", None)
+        if mapper is not None:
+            partition_values = list(mapper(partition_values))
+    return partition_values
+
+
 # --------------------------------------------------------------------- layout
 # Custom partition layouts (util/hdfs/PartitionLayout.scala): partition
 # values encoded in file/dir NAMES via %col% / %col:regex% tokens, e.g.

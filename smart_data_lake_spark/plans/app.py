@@ -19,7 +19,14 @@ from pyspark.sql import DataFrame, SparkSession
 from smart_data_lake_spark.actions.base import Action, DataFrameAction
 from smart_data_lake_spark.config import InstanceRegistry, load_config
 from smart_data_lake_spark.partitions import PartitionValues
-from smart_data_lake_spark.plans.dag import ActionDAG, ActionDAGRun, RunState, StateStore
+from smart_data_lake_spark.plans.dag import (
+    ActionDAG,
+    ActionDAGRun,
+    RunState,
+    StateStore,
+    connected_nodes_forward,
+    connected_nodes_reverse,
+)
 from smart_data_lake_spark.session import get_session
 from smart_data_lake_spark.subfeed import SparkSubFeed
 
@@ -127,6 +134,9 @@ class SmartDataLakeBuilder:
             "startfromdataobjectids", "endwithdataobjectids",
         }
 
+        dag = ActionDAG(actions)
+        edges = {(a, b) for a, downstream in dag.edges.items() for b in downstream}
+
         def term_match(term: str) -> set[str]:
             prefix, _, pat = term.partition(":")
             if not pat:
@@ -140,7 +150,6 @@ class SmartDataLakeBuilder:
                 )
             pat = pat.lower()
             ids = set()
-            dag = ActionDAG(actions)
             for a in actions:
                 feed = str(a.metadata.get("feed", "")).lower()
                 layer = str(a.metadata.get("layer", "")).lower()
@@ -154,20 +163,20 @@ class SmartDataLakeBuilder:
                 elif prefix == "layers" and fnmatch.fnmatch(layer, pat):
                     ids.add(a.id)
                 elif prefix == "startfromactionids" and fnmatch.fnmatch(a.id.lower(), pat):
-                    ids |= {a.id} | _closure(dag, a.id, downstream=True)
+                    ids |= connected_nodes_forward(edges, a.id)
                 elif prefix == "endwithactionids" and fnmatch.fnmatch(a.id.lower(), pat):
-                    ids |= {a.id} | _closure(dag, a.id, downstream=False)
+                    ids |= connected_nodes_reverse(edges, a.id)
                 elif prefix == "startfromdataobjectids" and any(
                     fnmatch.fnmatch(i.lower(), pat) for i in a.input_ids
                 ):
                     # actions READING the DataObject, plus everything after
                     # (AppUtil startFromDataObjectIds)
-                    ids |= {a.id} | _closure(dag, a.id, downstream=True)
+                    ids |= connected_nodes_forward(edges, a.id)
                 elif prefix == "endwithdataobjectids" and any(
                     fnmatch.fnmatch(o.lower(), pat) for o in a.output_ids
                 ):
                     # actions WRITING the DataObject, plus everything before
-                    ids |= {a.id} | _closure(dag, a.id, downstream=False)
+                    ids |= connected_nodes_reverse(edges, a.id)
             return ids
 
         selected: set[str] | None = None
@@ -273,31 +282,11 @@ class SmartDataLakeBuilder:
         for aid in dag.topological_order():
             action = dag.actions[aid]
             assert isinstance(action, DataFrameAction), "simulation requires DataFrame actions"
-            inputs = []
             for i in action.input_ids:
-                sf = feeds.get(i)
-                if sf is None:
+                if i not in feeds:
                     raise ValueError(f"simulation: missing input DataFrame for {i!r}")
-                inputs.append(sf)
             dfs = {i: feeds[i].df for i in action.input_ids}
             outputs = action.transform(spark, dfs)  # type: ignore[arg-type]
             for out_id, df in outputs.items():
                 feeds[out_id] = SparkSubFeed(data_object_id=out_id, df=df)
         return {k: sf.df for k, sf in feeds.items() if sf.df is not None}
-
-
-def _closure(dag: ActionDAG, action_id: str, downstream: bool) -> set[str]:
-    result: set[str] = set()
-    frontier = [action_id]
-    while frontier:
-        nxt = frontier.pop()
-        neighbors = (
-            dag.edges[nxt]
-            if downstream
-            else {a for a, ds in dag.edges.items() if nxt in ds}
-        )
-        for n in neighbors:
-            if n not in result:
-                result.add(n)
-                frontier.append(n)
-    return result

@@ -308,7 +308,7 @@ class ActionDAGRun:
         init_feeds: dict[str, SubFeed] = {}
         for aid in self.dag.topological_order():
             action = self.dag.actions[aid]
-            inputs = [self._input_subfeed(spark, action, i, init_feeds, init_phase=True) for i in action.input_ids]
+            inputs = [self._input_subfeed(i, init_feeds) for i in action.input_ids]
             try:
                 outputs = action.init(spark, inputs)
             except NoDataToProcessWarning:
@@ -368,7 +368,7 @@ class ActionDAGRun:
             action.execution_mode_state = dict(
                 self.state.data_object_state.get(aid, {})
             )
-            inputs = [self._input_subfeed(spark, action, i, exec_feeds) for i in action.input_ids]
+            inputs = [self._input_subfeed(i, exec_feeds) for i in action.input_ids]
 
             def _skipped(check_metrics: bool) -> list[SubFeed] | Exception:
                 # a no-data skip reports ONLY the 'skipped' metric (never
@@ -476,14 +476,7 @@ class ActionDAGRun:
         persisted.clear()
         persist_remaining.clear()
 
-    def _input_subfeed(
-        self,
-        spark: SparkSession,
-        action: Action,
-        do_id: str,
-        feeds: dict[str, SubFeed],
-        init_phase: bool = False,
-    ) -> SubFeed:
+    def _input_subfeed(self, do_id: str, feeds: dict[str, SubFeed]) -> SubFeed:
         sf = feeds.get(do_id)
         if sf is not None:
             return sf
