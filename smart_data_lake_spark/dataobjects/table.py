@@ -205,7 +205,7 @@ class ParquetTableDataObject(SparkFileDataObject, CanMergeDataFrame):
                 f"({self.id}) snapshot v{version} not available; "
                 f"retained: {self.snapshot_versions()}"
             )
-        return spark.read.format(self.format).options(**self._read_options()).load(path)
+        return self._load_inferring(spark, self._read_options(), path)
 
 
 @register_data_object_type

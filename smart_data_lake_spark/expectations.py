@@ -364,20 +364,27 @@ def validate_expectations(
     metrics: dict[str, Any],
 ) -> list[str]:
     """Evaluate all expectations; raise on Error severity, return warnings
-    (DataFrameActionImpl.scala:339-368). A JobPartition expectation is also
-    checked once per `name#partition` metric."""
+    (DataFrameActionImpl.scala:339-368). A JobPartition expectation is
+    checked once per `name#partition` metric, and against the job-level
+    metric only when there are none (unpartitioned output)."""
     warnings: list[str] = []
     errors: list[str] = []
     for e in expectations:
         if e.expectation is None:
             continue
-        msgs = [e.evaluate(metrics)]
-        if e.scope == ExpectationScope.JOB_PARTITION:
-            msgs += [
+        per_partition = (
+            {k: v for k, v in metrics.items() if k.startswith(f"{e.name}#")}
+            if e.scope == ExpectationScope.JOB_PARTITION
+            else {}
+        )
+        if per_partition:
+            msgs = [
                 f"expectation '{key}' failed: {value!r} !{e.expectation}"
-                for key, value in metrics.items()
-                if key.startswith(f"{e.name}#") and not _compare(value, e.expectation)
+                for key, value in per_partition.items()
+                if not _compare(value, e.expectation)
             ]
+        else:
+            msgs = [e.evaluate(metrics)]
         (errors if e.severity == Severity.ERROR else warnings).extend(m for m in msgs if m)
     if errors:
         raise ExpectationValidationError("; ".join(errors))

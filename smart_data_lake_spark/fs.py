@@ -22,7 +22,15 @@ from __future__ import annotations
 
 import os
 import shutil
-from typing import Protocol
+from typing import Iterator, Protocol
+
+from py4j.protocol import Py4JJavaError
+
+
+def _is_hidden(path: str) -> bool:
+    """Checksum files, `_SUCCESS` markers and the like: names Spark's file
+    sources skip when they list their input."""
+    return os.path.basename(path).startswith((".", "_"))
 
 
 class FileSystem(Protocol):
@@ -31,6 +39,7 @@ class FileSystem(Protocol):
     def mkdirs(self, path: str) -> None: ...
     def listdir(self, path: str) -> list[str]: ...
     def walk_files(self, path: str) -> list[str]: ...
+    def file_stats(self, path: str) -> Iterator[tuple[str, int, int]]: ...
     def delete(self, path: str, recursive: bool = False) -> None: ...
     def move(self, src: str, dst: str) -> None: ...
     def read_text(self, path: str) -> str: ...
@@ -54,6 +63,21 @@ class LocalFileSystem:
         return sorted(
             os.path.join(root, f) for root, _, files in os.walk(path) for f in files
         )
+
+    def file_stats(self, path: str) -> Iterator[tuple[str, int, int]]:
+        """(path relative to `path`, size in bytes, modification time in ms)
+        of every non-hidden file under `path`, or of `path` itself when it is
+        a file, in listing order; nothing when `path` does not exist. Lazy, so
+        a caller that stops early lists no further."""
+        path = strip_local_scheme(path)
+        if os.path.isfile(path):
+            found: Iterator[str] = iter([path])
+        else:
+            found = (os.path.join(root, f) for root, _, files in os.walk(path) for f in files)
+        for f in found:
+            if not _is_hidden(f):
+                st = os.stat(f)
+                yield os.path.relpath(f, path), st.st_size, st.st_mtime_ns // 1_000_000
 
     def delete(self, path: str, recursive: bool = False) -> None:
         if os.path.isdir(path):
@@ -110,6 +134,20 @@ class HadoopFileSystem:
         while it.hasNext():
             out.append(it.next().getPath().toString())
         return sorted(out)
+
+    def file_stats(self, path: str) -> Iterator[tuple[str, int, int]]:
+        try:
+            it = self._fs.listFiles(self._p(path), True)
+        except Py4JJavaError as exc:  # a missing path lists nothing, as on the local FS
+            if exc.java_exception.getClass().getName() == "java.io.FileNotFoundException":
+                return
+            raise
+        root = self._fs.makeQualified(self._p(path)).toUri().getPath()
+        while it.hasNext():
+            status = it.next()
+            f = status.getPath().toUri().getPath()
+            if not _is_hidden(f):
+                yield os.path.relpath(f, root), status.getLen(), status.getModificationTime()
 
     def delete(self, path: str, recursive: bool = False) -> None:
         self._fs.delete(self._p(path), recursive)

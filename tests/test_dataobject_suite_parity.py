@@ -2187,5 +2187,5 @@ def test_do_level_job_partition_expectation_fires(spark, tmp_path):
     )
     a = CopyAction(id="a", input_id="s", output_id="t", registry=reg)
     src.write_dataframe(spark.createDataFrame([("A", 1)], "p string, v int"))
-    with pytest.raises(ExpectationValidationError):
+    with pytest.raises(ExpectationValidationError, match=r"'minRows#p=A' failed: 1 !> 10"):
         a.exec(spark, [SparkSubFeed(data_object_id="s", partition_values=[pv({"p": "A"})])])

@@ -121,6 +121,19 @@ def test_validate_expectations_checks_each_job_partition():
     assert validate_expectations([exp], metrics) == ["expectation 'count#p=a' failed: 5 !< 3"]
 
 
+def test_job_partition_expectation_ignores_job_total():
+    """Only the per-partition metrics are checked: a job total of 4 does not
+    fail `< 3` when both partitions pass."""
+    exp = CountExpectation(name="count", expectation="< 3", scope=ExpectationScope.JOB_PARTITION)
+    assert validate_expectations([exp], {"count": 4, "count#p=a": 2, "count#p=b": 2}) == []
+
+
+def test_job_partition_expectation_on_unpartitioned_output_checks_job_metric():
+    exp = CountExpectation(name="count", expectation="< 3", scope=ExpectationScope.JOB_PARTITION)
+    with pytest.raises(ExpectationValidationError, match=r"'count' failed: 4 !< 3"):
+        validate_expectations([exp], {"count": 4})
+
+
 def test_merge_into_existing_parquet_table_counts_records_written(spark, tmp_path):
     """A MERGE into an existing table rewrites it whole; records_written is
     the row count of the rewritten table."""

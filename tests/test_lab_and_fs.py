@@ -168,6 +168,8 @@ def test_get_stats_file_and_hive(spark, tmp_path):
     assert stats["numRows"] == 100
     assert stats["numFiles"] == 2
     assert stats["sizeInBytes"] > 0 and stats["lastModifiedAt"] > 0
+    # a file: URI lists the same files
+    assert ParquetFileDataObject(id="u", path="file://" + p).get_stats(spark) == stats
 
     hive = HiveTableDataObject(
         id="h", path=str(tmp_path / "ht"), table={"name": "stats_t", "primary_key": ["id"]}
