@@ -16,12 +16,10 @@ fall back to a whole-root read).
 
 from __future__ import annotations
 
-import glob
 import hashlib
 import itertools
 import os
 import re
-import shutil
 import threading
 from typing import Any
 
@@ -41,6 +39,7 @@ from smart_data_lake_spark.dataobjects.base import (
     DataObject,
     _parse_schema,
 )
+from smart_data_lake_spark.fs import LocalFileSystem, get_fs, strip_local_scheme
 from smart_data_lake_spark.partitions import PartitionValues, apply_partition_filter
 from smart_data_lake_spark.save_modes import SaveMode
 
@@ -81,8 +80,6 @@ def _listing_digest(spark: SparkSession, targets: list[str]) -> bytes | None:
     reads (a glob target, no files, a listing error) or would cost more
     than the inference it saves (over `_LISTED_TARGETS_MAX` targets or
     `_LISTED_FILES_MAX` files; the listing stops at the first file over)."""
-    from smart_data_lake_spark.fs import get_fs
-
     if len(targets) > _LISTED_TARGETS_MAX or any(_GLOB_CHARS.search(t) for t in targets):
         return None
     fs = get_fs(spark, targets[0])  # the targets of one load share a file system
@@ -209,20 +206,13 @@ class SparkFileDataObject(
         """True iff the path holds at least one data file (not just dirs /
         _SUCCESS markers) — the guard execution modes use before reading the
         previous output."""
-        if not os.path.isdir(self.path):
-            return False
-        for root, _, files in os.walk(self.path):
-            if any(not f.startswith(("_", ".")) for f in files):
-                return True
-        return False
+        return any(get_fs(spark, self.path).file_stats(self.path))
 
     def get_stats(self, spark: SparkSession, update: bool = False) -> dict[str, Any]:
         """Path stats (HadoopFileDataObject.scala:325-331 / HdfsUtil
         .getPathStats): file count, bytes, newest mtime, partition-dir count —
         plus exact parquet row counts from footers (metadata pages only, no
         data scan). Errors degrade to an `info` message, like the reference."""
-        from smart_data_lake_spark.fs import LocalFileSystem, get_fs, strip_local_scheme
-
         try:
             fs = get_fs(spark, self.path)
             files = list(fs.file_stats(self.path))
@@ -233,9 +223,10 @@ class SparkFileDataObject(
             }
             if self.partitions:
                 stats["numPartitions"] = len(
-                    glob.glob(os.path.join(self.path, *[f"{p}=*" for p in self.partitions]))
+                    fs.glob(os.path.join(self.path, *[f"{p}=*" for p in self.partitions]))
                 )
             if self.format == "parquet" and files and isinstance(fs, LocalFileSystem):
+                # local only: pyarrow reads the footers from local files
                 import pyarrow.parquet as pq
 
                 root = strip_local_scheme(self.path)
@@ -282,8 +273,7 @@ class SparkFileDataObject(
             if (
                 resolved_schema is None
                 and "UNABLE_TO_INFER_SCHEMA" in str(exc)
-                and os.path.exists(self.path)
-                and self._all_data_files_empty()
+                and self._all_data_files_empty(spark)
             ):
                 return spark.createDataFrame([], T.StructType([]))
             raise
@@ -294,21 +284,20 @@ class SparkFileDataObject(
         self.validate_schema_min(df, "read")
         return df
 
-    def _all_data_files_empty(self) -> bool:
+    def _all_data_files_empty(self, spark: SparkSession) -> bool:
         """True when the path exists but every data file in it is zero bytes
         (or there are none) — the 'empty source' read case."""
-        target = self.path
-        if os.path.isfile(target):
-            return os.path.getsize(target) == 0
-        if not os.path.isdir(target):
-            return False
-        for root, _dirs, files in os.walk(target):
-            for f in files:
-                if f.startswith(("_", ".")):
-                    continue
-                if os.path.getsize(os.path.join(root, f)) > 0:
-                    return False
-        return True
+        fs = get_fs(spark, self.path)
+        return fs.exists(self.path) and all(size == 0 for _, size, _ in fs.file_stats(self.path))
+
+    def _data_files(self, spark: SparkSession | None) -> list[str]:
+        """Sorted paths, in the form of `self.path`, of every non-hidden file
+        under it (or of the path itself when it is a file)."""
+        root = self.path.rstrip("/")
+        return sorted(
+            root if rel == "." else f"{root}/{rel}"
+            for rel, _, _ in get_fs(spark, root).file_stats(root)
+        )
 
     def get_dataframe_for_files(
         self, spark: SparkSession, files: list[str]
@@ -399,15 +388,7 @@ class SparkFileDataObject(
         Returns None when no pruning applies (read the root)."""
         if not partition_values or not self.partitions:
             return None
-        paths: list[str] = []
-        for pv in partition_values:
-            pattern_parts = []
-            for col in self.partitions:
-                v = pv.as_dict.get(col)
-                pattern_parts.append(f"{col}={v}" if v is not None else f"{col}=*")
-            pattern = os.path.join(self.path, *pattern_parts)
-            paths.extend(sorted(glob.glob(pattern)))
-        return sorted(set(paths))
+        return sorted({p for pv in partition_values for p in self.get_concrete_full_paths(pv)})
 
     # schema priority chain (SparkFileDataObject.scala:114-141):
     # user-defined schema → persisted schema file → inference from sample
@@ -433,14 +414,11 @@ class SparkFileDataObject(
                     list(self.schema.fields) + [T.StructField(p, T.StringType()) for p in missing]
                 )
             return self.schema
-        from smart_data_lake_spark.fs import get_fs
-
-        schema_file = self._schema_file_path()
+        schema_file, sample = self._schema_file_path(), self._sample_file_path()
         fs = get_fs(spark, schema_file)
         if fs.exists(schema_file) and not fs.is_dir(schema_file):
             return T.StructType.fromJson(json.loads(fs.read_text(schema_file)))
-        sample = self._sample_file_path()
-        if os.path.isfile(sample):
+        if fs.exists(sample) and not fs.is_dir(sample):
             try:
                 return self._load_inferring(spark, self._read_options(), sample).schema
             except Exception:  # noqa: BLE001 — fall through to full inference
@@ -451,8 +429,6 @@ class SparkFileDataObject(
         """Write the schema file after a successful write so subsequent reads
         skip inference (SparkFileDataObject createSchemaFile)."""
         import json
-
-        from smart_data_lake_spark.fs import get_fs
 
         fs = get_fs(df.sparkSession, self.path)
         if self.format in ("csv", "json", "text") and fs.is_dir(self.path):
@@ -508,6 +484,7 @@ class SparkFileDataObject(
         self.init_write(df, partition_values)
         df = self._repartition_for_write(df)
         writer, obs = self._observed_writer(df)
+        fs = get_fs(df.sparkSession, self.path)
         if mode == SaveMode.OVERWRITE_PRESERVE_DIRECTORIES:
             # delete file contents but keep the directory tree (ACLs/mounts on
             # real filesystems survive, SDLSaveMode.scala OverwritePreserveDirectories)
@@ -516,9 +493,6 @@ class SparkFileDataObject(
                 if (partition_values and self.partitions)
                 else [self.path]
             )
-            from smart_data_lake_spark.fs import get_fs
-
-            fs = get_fs(df.sparkSession, self.path)
             for target in targets:
                 self._delete_files_keep_dirs(target, fs)
             writer.mode("append").save(self.path)
@@ -564,9 +538,9 @@ class SparkFileDataObject(
             # reflects the write plan, not just the data that happened to be
             # present (createMissingPartitions, CanHandlePartitions.scala:77-84)
             for pv in partition_values:
-                os.makedirs(os.path.join(self.path, pv.hive_path()), exist_ok=True)
+                fs.mkdirs(os.path.join(self.path, pv.hive_path()))
         self.persist_schema(df)
-        self._rename_output_files()
+        self._rename_output_files(fs)
         self._apply_acl(df.sparkSession)
         return dict(obs.get)
 
@@ -689,8 +663,6 @@ class SparkFileDataObject(
 
     # ------------------------------------------------------------- partitions
     def list_partitions(self, spark: SparkSession) -> list[PartitionValues]:
-        from smart_data_lake_spark.fs import get_fs
-
         fs = get_fs(spark, self.path)
         if not self.partitions or not fs.is_dir(self.path):
             return []
@@ -711,17 +683,13 @@ class SparkFileDataObject(
 
     @staticmethod
     def _delete_files_keep_dirs(base: str, fs=None) -> None:
-        from smart_data_lake_spark.fs import LocalFileSystem
-
-        fs = fs or LocalFileSystem()
+        fs = fs or get_fs(None, base)
         if not fs.is_dir(base):
             return
         for f in fs.walk_files(base):
             fs.delete(f)
 
     def delete_partitions(self, spark: SparkSession, partition_values: list[PartitionValues]) -> None:
-        from smart_data_lake_spark.fs import get_fs
-
         fs = get_fs(spark, self.path)
         for pv in partition_values:
             target = os.path.join(self.path, pv.hive_path())
@@ -735,17 +703,18 @@ class SparkFileDataObject(
         (merging with existing files) and drop the source dir — a pure
         metadata/rename operation, no Spark job
         (CanHandlePartitions.movePartitions / HdfsUtil.movePartitionDirectory)."""
+        fs = get_fs(spark, self.path)
         for src_pv, dst_pv in moves:
             src = os.path.join(self.path, src_pv.hive_path())
             dst = os.path.join(self.path, dst_pv.hive_path())
-            if not os.path.isdir(src):
+            if not fs.is_dir(src):
                 continue
-            os.makedirs(dst, exist_ok=True)
-            for name in os.listdir(src):
+            fs.mkdirs(dst)
+            for name in fs.listdir(src):
                 self.rename_file_handle_already_existing(
-                    os.path.join(src, name), os.path.join(dst, name)
+                    os.path.join(src, name), os.path.join(dst, name), fs
                 )
-            shutil.rmtree(src)
+            fs.delete(src, recursive=True)
 
     # --------------------------------------------------------- path resolution
     def _glob_parts_for(self, pv: PartitionValues, depth: int) -> list[str]:
@@ -761,32 +730,28 @@ class SparkFileDataObject(
         pv {b:1} resolves `a=*/b=1` (SparkFileDataObject getConcreteInitPaths).
         Driver-side globbing over hive dirs: listing cost is one directory
         walk, never a data scan."""
-        if not self.partitions:
-            return [self.path] if os.path.isdir(self.path) else []
         keys = [c for c in self.partitions if c in pv.as_dict]
-        if not keys:
-            return [self.path] if os.path.isdir(self.path) else []
-        depth = max(self.partitions.index(k) for k in keys) + 1
+        depth = max((self.partitions.index(k) + 1 for k in keys), default=0)
+        return self._concrete_dirs(pv, depth)
+
+    def _concrete_dirs(self, pv: PartitionValues, depth: int) -> list[str]:
+        """Existing directories matching `pv` down to `depth` partition
+        levels; depth 0 is the root itself."""
+        fs = get_fs(None, self.path)
+        if depth == 0:
+            return [self.path] if fs.is_dir(self.path) else []
         pattern = os.path.join(self.path, *self._glob_parts_for(pv, depth))
-        return sorted(p for p in glob.glob(pattern) if os.path.isdir(p))
+        return [p for p in fs.glob(pattern) if fs.is_dir(p)]
 
     def get_concrete_full_paths(self, pv: PartitionValues, return_files: bool = False) -> list[str]:
         """Like `get_concrete_init_paths` but expanded to full partition depth;
         with `return_files` the `file_name` glob is appended so the result is
         concrete data files (SparkFileDataObject getConcreteFullPaths)."""
-        if not self.partitions:
-            dirs = [self.path] if os.path.isdir(self.path) else []
-        else:
-            pattern = os.path.join(self.path, *self._glob_parts_for(pv, len(self.partitions)))
-            dirs = sorted(p for p in glob.glob(pattern) if os.path.isdir(p))
+        dirs = self._concrete_dirs(pv, len(self.partitions))
         if not return_files:
             return dirs
-        files: list[str] = []
-        for d in dirs:
-            files.extend(
-                f for f in sorted(glob.glob(os.path.join(d, self.file_name))) if os.path.isfile(f)
-            )
-        return files
+        fs = get_fs(None, self.path)
+        return [f for d in dirs for f in fs.glob(os.path.join(d, self.file_name)) if not fs.is_dir(f)]
 
     def get_file_refs(self, partition_values: list[PartitionValues] | None = None) -> list[str]:
         """Concrete data-file paths for the given partitions (or all), the
@@ -800,29 +765,39 @@ class SparkFileDataObject(
                 for f in self.get_concrete_full_paths(pv, return_files=True)
                 if not os.path.basename(f).startswith(("_", "."))
             )
-        if not self.partitions and os.path.isdir(self.path):
-            # unpartitioned: files live directly under the root
-            out = [
-                f
-                for f in sorted(glob.glob(os.path.join(self.path, self.file_name)))
-                if os.path.isfile(f) and not os.path.basename(f).startswith(("_", "."))
-            ]
         return sorted(set(out))
 
     @staticmethod
-    def rename_file_handle_already_existing(src: str, dst: str) -> str:
+    def rename_file_handle_already_existing(src: str, dst: str, fs=None) -> str:
         """Rename `src` to `dst`; when `dst` exists, probe `dst.1`, `dst.2`, …
         instead of clobbering (HadoopFileDataObject
         .renameFileHandleAlreadyExisting). Returns the path actually used."""
+        fs = fs or get_fs(None, dst)
         target = dst
         suffix = 0
-        while os.path.exists(target):
+        while fs.exists(target):
             suffix += 1
             target = f"{dst}.{suffix}"
-        os.replace(src, target)
+        fs.move(src, target)
         return target
 
-    def _rename_output_files(self) -> None:
+    def _task_files_by_dir(self, fs) -> dict[str, list[str]]:
+        """Spark's `part-*` task files of the last write, sorted, per output
+        directory: the root, or each leaf partition directory."""
+        pattern = os.path.join(self.path, *(["*"] * len(self.partitions)), "part-*")
+        by_dir: dict[str, list[str]] = {}
+        for f in fs.glob(pattern):
+            if not fs.is_dir(f):
+                by_dir.setdefault(os.path.dirname(f), []).append(f)
+        return by_dir
+
+    @staticmethod
+    def _delete_markers(fs, d: str, patterns: tuple[str, ...]) -> None:
+        for pattern in patterns:
+            for marker in fs.glob(os.path.join(d, pattern)):
+                fs.delete(marker)
+
+    def _rename_output_files(self, fs) -> None:
         """Apply SparkRepartitionDef.filename: per output directory, rename the
         spark `part-*` task files to the configured name — a single file keeps
         the name verbatim, N files become `stem.{i}{ext}` in task order
@@ -831,74 +806,47 @@ class SparkFileDataObject(
             return
         stem, ext = os.path.splitext(self.filename)
         if ext == ".zip" or self.options.get("compression") == "zip":
-            self._zip_output_files()
+            self._zip_output_files(fs)
             return
-        dirs = {self.path} if not self.partitions else {
-            os.path.dirname(f)
-            for f in glob.glob(os.path.join(self.path, *(["*"] * len(self.partitions)), "part-*"))
-        }
-        for d in sorted(dirs):
-            parts = sorted(glob.glob(os.path.join(d, "part-*")))
-            parts = [p for p in parts if os.path.isfile(p)]
-            if not parts:
-                continue
+        for d, parts in sorted(self._task_files_by_dir(fs).items()):
             if len(parts) == 1:
-                self.rename_file_handle_already_existing(parts[0], os.path.join(d, self.filename))
+                self.rename_file_handle_already_existing(parts[0], os.path.join(d, self.filename), fs)
             else:
                 for i, p in enumerate(parts, start=1):
                     self.rename_file_handle_already_existing(
-                        p, os.path.join(d, f"{stem}.{i}{ext}")
+                        p, os.path.join(d, f"{stem}.{i}{ext}"), fs
                     )
-            for marker in glob.glob(os.path.join(d, "_SUCCESS")) + glob.glob(
-                os.path.join(d, ".part-*.crc")
-            ) + glob.glob(os.path.join(d, "._SUCCESS.crc")):
-                os.remove(marker)
+            self._delete_markers(fs, d, ("_SUCCESS", ".part-*.crc", "._SUCCESS.crc"))
 
-    def _zip_output_files(self) -> None:
+    def _zip_output_files(self, fs) -> None:
         """Package the written task files into `filename` as a zip archive —
         the twin of the reference's ZipCsvCodec write path (ZipCsvCodec.scala;
         the reference cannot read zip back either, CsvFileDataObjectTest:245).
         Zip is an export-packaging convenience for small hand-offs, not a
         big-data path: entries are streamed file-by-file, never held in memory,
         but the archive itself is single-file by definition."""
+        # local only: zipfile reads and writes local files
         import zipfile
 
         stem, _zext = os.path.splitext(self.filename)  # data.csv.zip → data.csv
         # Partitioned objects write task files under col=val/ subdirectories;
-        # package one archive per partition directory, mirroring
-        # _rename_output_files' directory walk (driver-ADVICE r7: the flat
-        # glob left partitioned task files unpackaged).
-        dirs = {self.path} if not self.partitions else {
-            os.path.dirname(f)
-            for f in glob.glob(
-                os.path.join(self.path, *(["*"] * len(self.partitions)), "part-*")
-            )
-        }
-        for d in sorted(dirs):
-            parts = sorted(
-                p for p in glob.glob(os.path.join(d, "part-*")) if os.path.isfile(p)
-            )
-            if not parts:
-                continue
-            archive = os.path.join(d, self.filename)
+        # package one archive per partition directory, like
+        # _rename_output_files (driver-ADVICE r7: the flat glob left
+        # partitioned task files unpackaged).
+        for d, parts in sorted(self._task_files_by_dir(fs).items()):
+            archive = strip_local_scheme(os.path.join(d, self.filename))
             with zipfile.ZipFile(archive, "w", zipfile.ZIP_DEFLATED) as zf:
                 for i, p in enumerate(parts, start=1):
                     entry = stem if len(parts) == 1 else f"{os.path.splitext(stem)[0]}.{i}{os.path.splitext(stem)[1]}"
-                    zf.write(p, arcname=entry)
+                    zf.write(strip_local_scheme(p), arcname=entry)
             for p in parts:
-                os.remove(p)
-            for marker in glob.glob(os.path.join(d, "_SUCCESS")) + glob.glob(
-                os.path.join(d, ".*.crc")
-            ):
-                os.remove(marker)
+                fs.delete(p)
+            self._delete_markers(fs, d, ("_SUCCESS", ".*.crc"))
         # Spark writes _SUCCESS/.crc at the DATASET ROOT regardless of
         # partitioning; the per-partition walk above misses those in the
         # partitioned case (r8 ADVICE) — clean the root too.
         if self.partitions:
-            for marker in glob.glob(os.path.join(self.path, "_SUCCESS")) + glob.glob(
-                os.path.join(self.path, ".*.crc")
-            ):
-                os.remove(marker)
+            self._delete_markers(fs, self.path, ("_SUCCESS", ".*.crc"))
 
     # ------------------------------------------------------------ incremental
     def set_state(self, state: str | None) -> None:
@@ -907,16 +855,12 @@ class SparkFileDataObject(
     def get_state(self) -> str | None:
         import datetime
 
-        mtimes = [
-            os.path.getmtime(os.path.join(root, f))
-            for root, _, files in os.walk(self.path)
-            for f in files
-            if not f.startswith(("_", "."))
-        ]
-        if not mtimes:
+        stats = get_fs(None, self.path).file_stats(self.path)
+        newest_ms = max((mtime for _, _, mtime in stats), default=None)
+        if newest_ms is None:
             return self._incremental_state
         return (
-            datetime.datetime.fromtimestamp(max(mtimes), tz=datetime.timezone.utc)
+            datetime.datetime.fromtimestamp(newest_ms / 1000, tz=datetime.timezone.utc)
             .strftime("%Y-%m-%dT%H:%M:%S.%f")[:-3]
         )
 
@@ -1015,18 +959,14 @@ class RelaxedCsvFileDataObject(CsvFileDataObject):
         part_fields = [f for f in target.fields if f.name in self.partitions]
         corrupt_fields = [f for f in target.fields if f.name in (corrupt_col, self.CORRUPT_MSG_COL)]
         out_fields = data_fields + part_fields + corrupt_fields
-        files = [
-            os.path.join(root, f)
-            for root, _, fs in os.walk(self.path)
-            for f in fs
-            if not f.startswith(("_", "."))
-        ]
+        files = self._data_files(spark)
 
         def _first_lines(paths):
-            # runs on executors: task-local file access, first NON-EMPTY line
-            # per file (Spark's csv parser skips leading blank lines too)
-            for p in paths:
-                with open(p) as fh:
+            # runs on executors: task-local file access (each pair is the
+            # path and its scheme-stripped form), first NON-EMPTY line per
+            # file (Spark's csv parser skips leading blank lines too)
+            for p, local in paths:
+                with open(local) as fh:
                     for line in fh:
                         if line.strip():
                             yield p, line.rstrip("\n")
@@ -1036,7 +976,7 @@ class RelaxedCsvFileDataObject(CsvFileDataObject):
         if files:
             n_slices = max(1, min(len(files), 256))
             sniffed = (
-                spark.sparkContext.parallelize(sorted(files), n_slices)
+                spark.sparkContext.parallelize([(f, strip_local_scheme(f)) for f in files], n_slices)
                 .mapPartitions(_first_lines)
                 .collect()
             )
@@ -1205,14 +1145,15 @@ class AvroFileDataObject(SparkFileDataObject):
         mode = save_mode or self.save_mode
         self.init_write(df, partition_values)
         df = self._repartition_for_write(df)
+        fs = get_fs(spark, self.path)
         if mode in (SaveMode.ERROR_IF_EXISTS, SaveMode.IGNORE) and self.exists(spark):
             if mode == SaveMode.IGNORE:
                 return {"records_written": 0, "no_data": True}
             raise FileExistsError(f"({self.id}) {self.path} already exists")
         dynamic_overwrite = False
-        if mode in (SaveMode.OVERWRITE, SaveMode.OVERWRITE_OPTIMIZED) and os.path.isdir(self.path):
+        if mode in (SaveMode.OVERWRITE, SaveMode.OVERWRITE_OPTIMIZED) and fs.is_dir(self.path):
             if not self.partitions:
-                shutil.rmtree(self.path)
+                fs.delete(self.path, recursive=True)
             elif partition_values and mode == SaveMode.OVERWRITE_OPTIMIZED:
                 # overwrite only the named partitions (parent's
                 # OverwriteOptimized contract) — never the whole layout
@@ -1223,10 +1164,7 @@ class AvroFileDataObject(SparkFileDataObject):
                 # the write itself drives the cleanup — never a second pass
                 # over the input lineage (r6 review finding)
                 dynamic_overwrite = True
-        elif mode == SaveMode.OVERWRITE_PRESERVE_DIRECTORIES and os.path.isdir(self.path):
-            from smart_data_lake_spark.fs import get_fs
-
-            fs = get_fs(spark, self.path)
+        elif mode == SaveMode.OVERWRITE_PRESERVE_DIRECTORIES and fs.is_dir(self.path):
             targets = (
                 [os.path.join(self.path, pv.hive_path()) for pv in partition_values]
                 if (partition_values and self.partitions)
@@ -1246,11 +1184,11 @@ class AvroFileDataObject(SparkFileDataObject):
             # in those dirs that don't carry this write's prefix
             for sub in getattr(n, "partition_dirs", []):
                 target = os.path.join(self.path, sub) if sub else self.path
-                if not os.path.isdir(target):
+                if not fs.is_dir(target):
                     continue
-                for fname in os.listdir(target):
+                for fname in fs.listdir(target):
                     if fname.endswith(".avro") and not fname.startswith(prefix):
-                        os.remove(os.path.join(target, fname))
+                        fs.delete(os.path.join(target, fname))
         return {"records_written": int(n)}
 
     def delete_partitions(self, spark: SparkSession, partition_values: list[PartitionValues]) -> None:
@@ -1259,8 +1197,6 @@ class AvroFileDataObject(SparkFileDataObject):
         overwrite of a value needing encoding never silently keeps old files
         (r6 review finding)."""
         from urllib.parse import quote
-
-        from smart_data_lake_spark.fs import get_fs
 
         fs = get_fs(spark, self.path)
         for pv in partition_values:
@@ -1330,20 +1266,16 @@ class RawFileDataObject(SparkFileDataObject):
         if self.custom_partition_layout is None:
             return super().get_file_refs(partition_values)
         out = []
-        for root, _dirs, files in os.walk(self.path):
-            for f in sorted(files):
-                if f.startswith(("_", ".")):
-                    continue
-                full = os.path.join(root, f)
-                fpv = self.extract_partition_values(full)
-                if fpv is None:
-                    continue
-                if partition_values and not any(
-                    all(fpv.as_dict.get(k) == str(v) for k, v in want.as_dict.items())
-                    for want in partition_values
-                ):
-                    continue
-                out.append(full)
+        for full in self._data_files(None):
+            fpv = self.extract_partition_values(full)
+            if fpv is None:
+                continue
+            if partition_values and not any(
+                all(fpv.as_dict.get(k) == str(v) for k, v in want.as_dict.items())
+                for want in partition_values
+            ):
+                continue
+            out.append(full)
         return out
 
     def list_partitions(self, spark: SparkSession) -> list[PartitionValues]:

@@ -18,8 +18,7 @@ from __future__ import annotations
 
 import os
 import threading
-import shutil
-import tempfile
+import uuid
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,6 +27,7 @@ from pyspark.sql import functions as F
 from smart_data_lake_spark.config import register_data_object_type
 from smart_data_lake_spark.dataobjects.base import CanMergeDataFrame, Table
 from smart_data_lake_spark.dataobjects.file import SparkFileDataObject
+from smart_data_lake_spark.fs import get_fs
 from smart_data_lake_spark.partitions import PartitionValues
 from smart_data_lake_spark.save_modes import SaveMode, SaveModeMergeOptions
 
@@ -79,9 +79,7 @@ class ParquetTableDataObject(SparkFileDataObject, CanMergeDataFrame):
         return self.table.primary_key
 
     def exists(self, spark: SparkSession) -> bool:
-        return os.path.isdir(self.path) and any(
-            f.endswith(".parquet") for _, _, fs in os.walk(self.path) for f in fs
-        )
+        return any(f.endswith(".parquet") for f, _, _ in get_fs(spark, self.path).file_stats(self.path))
 
     def get_dataframe(self, spark, partition_values=None):
         if not self.exists(spark):
@@ -135,16 +133,11 @@ class ParquetTableDataObject(SparkFileDataObject, CanMergeDataFrame):
         All FS ops go through the fs abstraction, so the same code runs on
         local disk (os/shutil) or a Hadoop-compatible store (rename-based
         swap; note object stores make rename O(data) — deploy Delta/Iceberg
-        there, which is why MERGE prefers those DataObjects)."""
-        from smart_data_lake_spark.fs import get_fs, scheme_of
-
-        spark = df.sparkSession
-        fs = get_fs(spark, self.path)
+        there, which is why MERGE prefers those DataObjects). The temp dir is
+        a uuid-named sibling of the table on every store."""
+        fs = get_fs(df.sparkSession, self.path)
         parent = os.path.dirname(self.path.rstrip("/")) or "."
-        if scheme_of(self.path) in ("", "file"):
-            tmp = tempfile.mkdtemp(prefix=f"sdl_{self.id}_", dir=parent)
-        else:
-            tmp = f"{parent}/sdl_{self.id}_tmp_{os.getpid()}"
+        tmp = f"{parent}/sdl_{self.id}_tmp_{uuid.uuid4().hex}"
         try:
             writer, obs = self._observed_writer(df)
             writer.mode("overwrite").save(tmp)
@@ -180,8 +173,6 @@ class ParquetTableDataObject(SparkFileDataObject, CanMergeDataFrame):
     def snapshot_versions(self, fs=None) -> list[int]:
         """Available snapshot versions, oldest first (excludes the live
         table, which is always the newest state)."""
-        from smart_data_lake_spark.fs import get_fs
-
         fs = fs or get_fs(None, self.path)
         root = self._snapshot_root
         if not fs.is_dir(root):
@@ -198,8 +189,6 @@ class ParquetTableDataObject(SparkFileDataObject, CanMergeDataFrame):
         capability through their native `versionAsOf`/`snapshot-id` reads;
         the parquet stand-in serves it from the retained directories."""
         path = f"{self._snapshot_root}/v{version}"
-        from smart_data_lake_spark.fs import get_fs
-
         if not get_fs(spark, self.path).is_dir(path):
             raise ValueError(
                 f"({self.id}) snapshot v{version} not available; "

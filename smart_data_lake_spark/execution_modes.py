@@ -10,8 +10,10 @@ ActionSubFeedsImpl.scala:96-118.
 from __future__ import annotations
 
 import abc
+import os
 from dataclasses import dataclass, field
 from typing import Any
+from urllib.parse import unquote
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -22,6 +24,7 @@ from smart_data_lake_spark.dataobjects.base import (
     CanHandlePartitions,
     DataObject,
 )
+from smart_data_lake_spark.fs import get_fs
 from smart_data_lake_spark.partitions import PartitionValues, diff_partition_values
 
 
@@ -247,8 +250,6 @@ class FileIncrementalMoveMode(ExecutionMode):
         return ExecutionModeResult()
 
     def _archive_target(self, input_do, file_path: str) -> str:
-        import os
-
         if self.archive_inside_partition:
             # <partition-dir>/<archive_path>/<filename>
             return os.path.join(
@@ -263,20 +264,19 @@ class FileIncrementalMoveMode(ExecutionMode):
         return os.path.join(base, os.path.basename(file_path))
 
     def post_exec(self, spark, input_do, output_do, state):
-        import os
-        import shutil
-        from urllib.parse import urlparse
-
-        for uri in self._consumed_files:
-            p = urlparse(uri).path
-            if not os.path.exists(p):
+        # the consumed files are percent-encoded URIs as `inputFiles()`
+        # returns them (`file:///x/a%20b`, `s3a://bucket/x`): each one is
+        # decoded and moved by its own file system
+        for path in map(unquote, self._consumed_files):
+            fs = get_fs(spark, path)
+            if not fs.exists(path):
                 continue
             if self.archive_path or self.archive_inside_partition:
-                target = self._archive_target(input_do, p)
-                os.makedirs(os.path.dirname(target), exist_ok=True)
-                shutil.move(p, target)
+                target = self._archive_target(input_do, path)
+                fs.mkdirs(os.path.dirname(target))
+                fs.move(path, target)
             else:
-                os.remove(p)
+                fs.delete(path)
         self._consumed_files = []
 
 

@@ -6,20 +6,30 @@ rewrites, schema files) through the Hadoop FileSystem API
 disk, HDFS, or object stores. The PySpark equivalent: a small protocol with
 two implementations —
 
-  * LocalFileSystem — os/shutil, used for plain paths (`/...`, `file:`);
+  * LocalFileSystem — os/shutil/glob, used for plain paths (`/x`, `x`) and
+    local URIs in both forms Spark and Hadoop produce (`file:///x`, and
+    `file:/x` as Hadoop's `Path.toString()` prints it); every method strips
+    the scheme first, and `glob`/`walk_files` hand back paths in the form
+    of their argument;
   * HadoopFileSystem — the JVM `org.apache.hadoop.fs.FileSystem` reached
     through `spark._jvm`, used for any path with a non-local scheme
     (hdfs:, s3a:, abfss:, gs:, ...). Every operation is a py4j call on
     driver-side metadata — O(files-touched), never O(data), matching the
     reference's usage.
 
-`get_fs(spark, path)` picks the implementation by scheme. DataObjects call
-only this protocol for list/exists/delete/move/read-text/write-text, so a
-deployment against object storage needs no code change.
+`get_fs(spark, path)` picks the implementation by scheme (`spark=None` uses
+the active session). The file DataObjects (`dataobjects/file.py`,
+`dataobjects/table.py`) reach storage on the driver only through this
+protocol — listings, globs, existence checks, moves, deletes, schema files —
+so a deployment against object storage needs no code change. Two helpers
+there stay local-only, on the scheme-stripped path, because their libraries
+read local files: zip packaging (`zipfile`) and parquet footer row counts in
+`get_stats` (`pyarrow`).
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 from typing import Iterator, Protocol
@@ -38,6 +48,7 @@ class FileSystem(Protocol):
     def is_dir(self, path: str) -> bool: ...
     def mkdirs(self, path: str) -> None: ...
     def listdir(self, path: str) -> list[str]: ...
+    def glob(self, pattern: str) -> list[str]: ...
     def walk_files(self, path: str) -> list[str]: ...
     def file_stats(self, path: str) -> Iterator[tuple[str, int, int]]: ...
     def delete(self, path: str, recursive: bool = False) -> None: ...
@@ -47,21 +58,33 @@ class FileSystem(Protocol):
 
 
 class LocalFileSystem:
+    """Plain paths and `file:` URIs; each method strips the scheme through
+    `strip_local_scheme`."""
+
     def exists(self, path: str) -> bool:
-        return os.path.exists(path)
+        return os.path.exists(strip_local_scheme(path))
 
     def is_dir(self, path: str) -> bool:
-        return os.path.isdir(path)
+        return os.path.isdir(strip_local_scheme(path))
 
     def mkdirs(self, path: str) -> None:
-        os.makedirs(path, exist_ok=True)
+        os.makedirs(strip_local_scheme(path), exist_ok=True)
 
     def listdir(self, path: str) -> list[str]:
-        return sorted(os.listdir(path))
+        return sorted(os.listdir(strip_local_scheme(path)))
+
+    def glob(self, pattern: str) -> list[str]:
+        """Sorted matches of a `glob.glob` pattern, in the form of `pattern`
+        (a `file://` pattern gives `file://` paths)."""
+        scheme = _local_scheme(pattern)
+        return sorted(scheme + p for p in glob.glob(pattern[len(scheme):]))
 
     def walk_files(self, path: str) -> list[str]:
+        scheme = _local_scheme(path)
         return sorted(
-            os.path.join(root, f) for root, _, files in os.walk(path) for f in files
+            scheme + os.path.join(root, f)
+            for root, _, files in os.walk(path[len(scheme):])
+            for f in files
         )
 
     def file_stats(self, path: str) -> Iterator[tuple[str, int, int]]:
@@ -80,6 +103,7 @@ class LocalFileSystem:
                 yield os.path.relpath(f, path), st.st_size, st.st_mtime_ns // 1_000_000
 
     def delete(self, path: str, recursive: bool = False) -> None:
+        path = strip_local_scheme(path)
         if os.path.isdir(path):
             if recursive:
                 shutil.rmtree(path)
@@ -89,13 +113,14 @@ class LocalFileSystem:
             os.remove(path)
 
     def move(self, src: str, dst: str) -> None:
-        shutil.move(src, dst)
+        shutil.move(strip_local_scheme(src), strip_local_scheme(dst))
 
     def read_text(self, path: str) -> str:
-        with open(path) as f:
+        with open(strip_local_scheme(path)) as f:
             return f.read()
 
     def write_text(self, path: str, content: str) -> None:
+        path = strip_local_scheme(path)
         os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
         with open(path, "w") as f:
             f.write(content)
@@ -127,6 +152,11 @@ class HadoopFileSystem:
     def listdir(self, path: str) -> list[str]:
         statuses = self._fs.listStatus(self._p(path))
         return sorted(s.getPath().getName() for s in statuses)
+
+    def glob(self, pattern: str) -> list[str]:
+        # globStatus returns null, not an empty array, for a missing non-glob path
+        statuses = self._fs.globStatus(self._p(pattern))
+        return sorted(s.getPath().toString() for s in statuses or [])
 
     def walk_files(self, path: str) -> list[str]:
         out = []
@@ -200,7 +230,7 @@ def touch(fs: FileSystem, path: str) -> None:
             # FileSystem.setTimes(path, mtimeMillis, atimeMillis); -1 keeps atime
             fs._fs.setTimes(fs._p(path), int(time.time() * 1000), -1)
         else:
-            os.utime(path)
+            os.utime(strip_local_scheme(path))
     else:
         fs.write_text(path, "")
 
@@ -248,11 +278,23 @@ def scheme_of(path: str) -> str:
 
 def get_fs(spark, path: str) -> FileSystem:
     """Scheme-dispatching factory; plain and file: paths use os/shutil,
-    anything else goes through the JVM Hadoop FileSystem."""
+    anything else goes through the JVM Hadoop FileSystem of `spark`, or of
+    the active session when `spark` is None."""
     if scheme_of(path) in _LOCAL_SCHEMES:
         return LocalFileSystem()
+    if spark is None:
+        from pyspark.sql import SparkSession
+
+        spark = SparkSession.active()
     return HadoopFileSystem(spark, path)
 
 
+def _local_scheme(path: str) -> str:
+    """The `file://` or `file:` prefix of `path`, or ''."""
+    return next((s for s in ("file://", "file:") if path.startswith(s)), "")
+
+
 def strip_local_scheme(path: str) -> str:
-    return path[len("file://"):] if path.startswith("file://") else path
+    """`file:///x` and `file:/x` (the form Hadoop's `Path.toString()` prints)
+    → `/x`; any other path unchanged."""
+    return path[len(_local_scheme(path)):]

@@ -40,18 +40,44 @@ def test_hadoop_fs_roundtrip(spark, tmp_path):
     assert fs.exists(f"{base}/a/b/y.json") and not fs.exists(f"{base}/a/b/x.json")
     fs.delete(f"{base}/a", recursive=True)
     assert not fs.exists(f"{base}/a")
+    # glob matches what the local implementation matches; a missing
+    # non-glob path (globStatus returns null) matches nothing
+    for dt in ("a", "b"):
+        fs.mkdirs(f"{base}/t/dt={dt}")
+    local = LocalFileSystem()
+    assert [p.split(str(tmp_path))[1] for p in fs.glob(f"{base}/t/dt=*")] == [
+        p.split(str(tmp_path))[1] for p in local.glob(f"{tmp_path}/t/dt=*")
+    ] == ["/t/dt=a", "/t/dt=b"]
+    assert fs.glob(f"{base}/t/missing") == local.glob(f"{tmp_path}/t/missing") == []
 
 
-def test_local_fs_roundtrip(tmp_path):
+def test_get_fs_without_session_argument_uses_active_session(spark):
+    from smart_data_lake_spark.fs import HadoopFileSystem
+
+    assert isinstance(get_fs(None, "hdfs://localhost:1/x"), HadoopFileSystem)
+    assert isinstance(get_fs(None, "file:/x"), LocalFileSystem)
+
+
+@pytest.mark.parametrize("form", ["plain", "file://", "file:"])
+def test_local_fs_roundtrip(tmp_path, form):
+    """Every LocalFileSystem method takes a plain path and both `file:` URI
+    forms; glob and walk_files answer in the form they were asked in."""
     fs = LocalFileSystem()
-    p = str(tmp_path / "d1" / "f.txt")
+    base = str(tmp_path) if form == "plain" else f"{form}{tmp_path}"
+    p = f"{base}/d1/f.txt"
     fs.write_text(p, "hello")
     assert fs.read_text(p) == "hello"
-    assert fs.walk_files(str(tmp_path)) == [p]
-    fs.move(p, str(tmp_path / "d1" / "g.txt"))
-    assert fs.listdir(str(tmp_path / "d1")) == ["g.txt"]
-    fs.delete(str(tmp_path / "d1"), recursive=True)
-    assert not fs.exists(str(tmp_path / "d1"))
+    assert fs.exists(p) and fs.is_dir(f"{base}/d1") and not fs.is_dir(p)
+    assert fs.walk_files(base) == [p]
+    assert fs.glob(f"{base}/d*/*.txt") == [p]
+    assert list(fs.file_stats(base)) == [("d1/f.txt", 5, (tmp_path / "d1" / "f.txt").stat().st_mtime_ns // 10**6)]
+    fs.move(p, f"{base}/d1/g.txt")
+    assert fs.listdir(f"{base}/d1") == ["g.txt"]
+    fs.mkdirs(f"{base}/d2")
+    assert (tmp_path / "d2").is_dir()
+    fs.delete(f"{base}/d1/g.txt")
+    fs.delete(f"{base}/d1", recursive=True)
+    assert not fs.exists(f"{base}/d1") and not (tmp_path / "d1").exists()
 
 
 @pytest.fixture()
