@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import abc
 import datetime
+from functools import partial
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,7 +49,7 @@ from smart_data_lake_spark.expectations import (
 )
 from smart_data_lake_spark.partitions import reduce_to_partitions, transform_partition_values
 from smart_data_lake_spark.save_modes import SaveMode
-from smart_data_lake_spark.subfeed import SparkSubFeed
+from smart_data_lake_spark.subfeed import PendingRead, SparkSubFeed
 
 
 class NoDataToProcessWarning(Exception):
@@ -256,7 +257,7 @@ class DataFrameAction(Action):
             out_do = self._do(out_id)
             if isinstance(out_do, CanWriteDataFrame):
                 out_do.init_write(df)
-            out_subfeeds.append(SparkSubFeed(data_object_id=out_id, df=df, is_dummy=True))
+            out_subfeeds.append(SparkSubFeed(data_object_id=out_id, frame=df, is_dummy=True))
         return out_subfeeds
 
     # ------------------------------------------------------------------ exec
@@ -328,13 +329,17 @@ class DataFrameAction(Action):
             self.runtime_metrics[out_id] = metrics
             for w in validate_expectations(exps, metrics):
                 print(f"WARN ({self.id}/{out_id}): {w}")
-            sf = SparkSubFeed(data_object_id=out_id, partition_values=pvs, metrics=metrics)
-            # re-read from storage for downstream lineage (breakLineage after
-            # write, DataFrameActionImpl.scala:53-64) — the written table is
-            # the new source of truth and keeps plans short
+            # downstream lineage starts from a read of what was written
+            # (breakLineage after write, DataFrameActionImpl.scala:53-64): the
+            # written table is the new source of truth and keeps plans short.
+            # The read is pending until a consumer uses `df`, so an output
+            # nothing reads costs no schema-inference job
+            read = None
             if isinstance(out_do, CanCreateDataFrame):
-                sf = sf.with_df(out_do.get_dataframe(spark, pvs or None))
-            out_subfeeds.append(sf)
+                read = PendingRead(partial(out_do.get_dataframe, spark, pvs or None))
+            out_subfeeds.append(
+                SparkSubFeed(data_object_id=out_id, partition_values=pvs, metrics=metrics, frame=read)
+            )
 
         if self.execution_mode is not None:
             # same output resolution as _apply_execution_mode: apply() and
@@ -500,7 +505,7 @@ class DataFrameAction(Action):
                 from smart_data_lake_spark.streaming import dummy_streaming_df
 
                 df = dummy_streaming_df(spark, schema)
-            elif sf is not None and sf.df is not None and phase == "init" and self.break_dataframe_lineage:
+            elif phase == "init" and self.break_dataframe_lineage and sf is not None and sf.df is not None:
                 # breakDataframeLineage: don't pass the upstream frame on.
                 # In init the storage may not exist yet — validate lineage on
                 # an empty dummy (DataFrameActionImpl.scala:212-223 dummy-DF
@@ -513,7 +518,12 @@ class DataFrameAction(Action):
                 if isinstance(in_do, CanCreateDataFrame) and hasattr(in_do, "create_read_schema"):
                     schema = in_do.create_read_schema(spark)
                 df = spark.createDataFrame([], schema or sf.df.schema)
-            elif sf is not None and sf.df is not None and (phase == "init" or not sf.is_dummy) and not self.break_dataframe_lineage:
+            elif (
+                not self.break_dataframe_lineage
+                and sf is not None
+                and (phase == "init" or not sf.is_dummy)
+                and sf.df is not None
+            ):
                 df = sf.df
                 if pvs:
                     from smart_data_lake_spark.partitions import apply_partition_filter

@@ -10,6 +10,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from smart_data_lake_spark.config import register_action_type
+from smart_data_lake_spark.fs import get_fs
 from smart_data_lake_spark.actions.base import DataFrameAction
 from smart_data_lake_spark.transformers.df_transformers import DfTransformer, apply_df_transformers
 
@@ -51,9 +52,6 @@ class CopyAction(DataFrameAction):
     def post_exec(self, spark, inputs, outputs):
         super().post_exec(spark, inputs, outputs)
         if self.delete_data_after_read:
-            import shutil
-
-            in_do = self._do(self.input_id)
-            path = getattr(in_do, "path", None)
+            path = getattr(self._do(self.input_id), "path", None)
             if path:
-                shutil.rmtree(path, ignore_errors=True)
+                get_fs(spark, path).delete(path, recursive=True)

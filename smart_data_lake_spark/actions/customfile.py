@@ -14,6 +14,7 @@ from typing import Any, Callable
 
 from smart_data_lake_spark.config import register_action_type
 from smart_data_lake_spark.actions.base import Action
+from smart_data_lake_spark.fs import list_local_files, local_path
 from smart_data_lake_spark.subfeed import FileSubFeed
 
 
@@ -52,21 +53,14 @@ class CustomFileAction(Action):
 
     def _list_input_files(self) -> list[str]:
         src = getattr(self._do(self.input_id), "path", None)
-        if src is None or not os.path.isdir(src):
-            return []
-        return sorted(
-            os.path.join(root, f)
-            for root, _, files in os.walk(src)
-            for f in files
-            if not f.startswith(("_", "."))
-        )
+        return [] if src is None else list_local_files(src, repr(self))
 
     def init(self, spark, subfeeds):
         return [FileSubFeed(data_object_id=self.output_id, file_refs=self._list_input_files())]
 
     def exec(self, spark, subfeeds):
-        src_root = getattr(self._do(self.input_id), "path")
-        dst_root = getattr(self._do(self.output_id), "path")
+        src_root = local_path(getattr(self._do(self.input_id), "path"), repr(self))
+        dst_root = local_path(getattr(self._do(self.output_id), "path"), repr(self))
         os.makedirs(dst_root, exist_ok=True)
         files = self._list_input_files()
         pairs = [

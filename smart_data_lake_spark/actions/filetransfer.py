@@ -15,7 +15,8 @@ from typing import Any
 
 from smart_data_lake_spark.config import register_action_type
 from smart_data_lake_spark.actions.base import Action
-from smart_data_lake_spark.subfeed import FileSubFeed, SparkSubFeed
+from smart_data_lake_spark.fs import list_local_files, local_path
+from smart_data_lake_spark.subfeed import FileSubFeed
 
 
 @register_action_type
@@ -47,14 +48,7 @@ class FileTransferAction(Action):
 
     def _list_input_files(self) -> list[str]:
         src = getattr(self._do(self.input_id), "path", None)
-        if src is None or not os.path.isdir(src):
-            return []
-        return [
-            os.path.join(root, f)
-            for root, _, files in os.walk(src)
-            for f in files
-            if not f.startswith(("_", "."))
-        ]
+        return [] if src is None else list_local_files(src, repr(self))
 
     @staticmethod
     def _filter_by_partitions(files: list[str], subfeeds) -> list[str]:
@@ -81,8 +75,8 @@ class FileTransferAction(Action):
     def exec(self, spark, subfeeds):
         from smart_data_lake_spark.actions.base import NoDataToProcessWarning
 
-        src_root = getattr(self._do(self.input_id), "path")
-        dst_root = getattr(self._do(self.output_id), "path")
+        src_root = local_path(getattr(self._do(self.input_id), "path"), repr(self))
+        dst_root = local_path(getattr(self._do(self.output_id), "path"), repr(self))
         os.makedirs(dst_root, exist_ok=True)
         files = self._filter_by_partitions(self._list_input_files(), subfeeds)
         if not files:

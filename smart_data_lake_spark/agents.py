@@ -140,7 +140,7 @@ class ProxyAction:
                 else:
                     schema = T.StructType.fromDDL(ddl)
                 empty = spark.createDataFrame([], schema)
-                out.append(SparkSubFeed(data_object_id=do_id, df=empty, is_dummy=True))
+                out.append(SparkSubFeed(data_object_id=do_id, frame=empty, is_dummy=True))
             else:
                 out.append(SparkSubFeed(data_object_id=do_id, is_dummy=True))
         return out

@@ -24,7 +24,10 @@ protocol — listings, globs, existence checks, moves, deletes, schema files —
 so a deployment against object storage needs no code change. Two helpers
 there stay local-only, on the scheme-stripped path, because their libraries
 read local files: zip packaging (`zipfile`) and parquet footer row counts in
-`get_stats` (`pyarrow`).
+`get_stats` (`pyarrow`). FileTransferAction and CustomFileAction copy and
+transform files with local file APIs; `local_path` and `list_local_files`
+give them plain paths for plain and `file:` paths and reject any other
+scheme.
 """
 
 from __future__ import annotations
@@ -287,6 +290,25 @@ def get_fs(spark, path: str) -> FileSystem:
 
         spark = SparkSession.active()
     return HadoopFileSystem(spark, path)
+
+
+def local_path(path: str, user: str) -> str:
+    """`path` for local file APIs (`open`, `shutil`): a plain path as is, a
+    `file:` URI without its scheme. Any other scheme raises, naming `user`,
+    since local file APIs cannot reach a remote store."""
+    if scheme_of(path) not in _LOCAL_SCHEMES:
+        raise ValueError(f"{user} works on local files only; {path!r} is on a remote store")
+    return strip_local_scheme(path)
+
+
+def list_local_files(path: str, user: str) -> list[str]:
+    """Sorted local paths (see `local_path`) of every non-hidden file under
+    `path`, or of `path` itself when it is a file, listed by `file_stats`."""
+    root = local_path(path, user)
+    return sorted(
+        root if rel == "." else os.path.join(root, rel)
+        for rel, _, _ in LocalFileSystem().file_stats(root)
+    )
 
 
 def _local_scheme(path: str) -> str:

@@ -277,7 +277,7 @@ class SmartDataLakeBuilder:
         actions = self.select_actions(feed_sel)
         dag = ActionDAG(actions)
         feeds: dict[str, SparkSubFeed] = {
-            do_id: SparkSubFeed(data_object_id=do_id, df=df) for do_id, df in input_dfs.items()
+            do_id: SparkSubFeed(data_object_id=do_id, frame=df) for do_id, df in input_dfs.items()
         }
         for aid in dag.topological_order():
             action = dag.actions[aid]
@@ -288,5 +288,5 @@ class SmartDataLakeBuilder:
             dfs = {i: feeds[i].df for i in action.input_ids}
             outputs = action.transform(spark, dfs)  # type: ignore[arg-type]
             for out_id, df in outputs.items():
-                feeds[out_id] = SparkSubFeed(data_object_id=out_id, df=df)
+                feeds[out_id] = SparkSubFeed(data_object_id=out_id, frame=df)
         return {k: sf.df for k, sf in feeds.items() if sf.df is not None}

@@ -338,13 +338,19 @@ class ActionDAGRun:
         persist_remaining: dict[str, int] = {}
 
         def _maybe_persist(sf: SubFeed) -> None:
-            df = getattr(sf, "df", None)
+            # the consumer count comes first: `df` of a written output is a
+            # pending storage read, and one consumer reads it on its own
             if (
-                df is None
-                or df.isStreaming
+                not isinstance(sf, SparkSubFeed)
                 or sf.data_object_id in persisted
                 or consumer_count.get(sf.data_object_id, 0) < 2
             ):
+                return
+            try:
+                df = sf.df
+            except Exception:  # noqa: BLE001 — left to the consumers: each reads again and fails
+                return
+            if df is None or df.isStreaming:
                 return
             from pyspark import StorageLevel
 

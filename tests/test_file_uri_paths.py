@@ -8,15 +8,19 @@ import os
 import pytest
 from pyspark.sql import Row
 
+from smart_data_lake_spark.actions import CopyAction, CustomFileAction, FileTransferAction
+from smart_data_lake_spark.config import InstanceRegistry
 from smart_data_lake_spark.dataobjects import (
     CsvFileDataObject,
     ParquetFileDataObject,
     ParquetTableDataObject,
+    RawFileDataObject,
     RelaxedCsvFileDataObject,
 )
 from smart_data_lake_spark.execution_modes import FileIncrementalMoveMode
 from smart_data_lake_spark.fs import strip_local_scheme
 from smart_data_lake_spark.partitions import PartitionValues
+from smart_data_lake_spark.plans import ActionDAG, ActionDAGRun
 from smart_data_lake_spark.save_modes import SaveMode
 
 FORMS = {"plain": "", "file_uri": "file://", "file_colon": "file:"}
@@ -111,3 +115,44 @@ def test_file_incremental_move_mode_handles_percent_encoded_uris(spark, tmp_path
     assert not do.exists(spark)
     archived = os.listdir(tmp_path / "archive") if archive else []
     assert any(f.endswith(".parquet") for f in archived) == archive
+
+
+@pytest.mark.parametrize("form", FORMS)
+def test_copy_action_deletes_input_after_read(spark, tmp_path, form):
+    src = str(tmp_path / "src")
+    spark.range(3).write.parquet(src)
+    registry = InstanceRegistry()
+    registry.register_data_object(ParquetFileDataObject(id="src", path=FORMS[form] + src))
+    registry.register_data_object(ParquetFileDataObject(id="out", path=str(tmp_path / "out")))
+    CopyAction(id="c", input_id="src", output_id="out", registry=registry, delete_data_after_read=True)
+    ActionDAGRun(ActionDAG(list(registry.actions.values())), registry).run(spark)
+    assert not os.path.exists(src)
+    assert spark.read.parquet(str(tmp_path / "out")).count() == 3
+
+
+@pytest.mark.parametrize("form", FORMS)
+def test_file_transfer_lists_and_copies_the_same_files(spark, tmp_path, form):
+    src = tmp_path / "src"
+    for rel in ("a.csv", "dt=1/b.csv", "dt=1/_SUCCESS", "dt=2/.c.csv.crc"):
+        (src / rel).parent.mkdir(parents=True, exist_ok=True)
+        (src / rel).write_text(rel)
+    registry = InstanceRegistry()
+    scheme = FORMS[form]
+    registry.register_data_object(RawFileDataObject(id="src", path=scheme + str(src)))
+    registry.register_data_object(RawFileDataObject(id="dst", path=scheme + str(tmp_path / "dst")))
+    action = FileTransferAction(id="ft", input_id="src", output_id="dst", registry=registry)
+    assert action._list_input_files() == [str(src / "a.csv"), str(src / "dt=1" / "b.csv")]
+    (sf,) = action.exec(spark, [])
+    assert sf.file_refs == [str(tmp_path / "dst" / "a.csv"), str(tmp_path / "dst" / "dt=1" / "b.csv")]
+    assert (tmp_path / "dst" / "dt=1" / "b.csv").read_text() == "dt=1/b.csv"
+
+
+@pytest.mark.parametrize("action_cls", [FileTransferAction, CustomFileAction])
+def test_file_actions_reject_a_remote_store(action_cls):
+    registry = InstanceRegistry()
+    registry.register_data_object(RawFileDataObject(id="src", path="s3a://bucket/landing"))
+    registry.register_data_object(RawFileDataObject(id="dst", path="/tmp/unused"))
+    kwargs = {"transform_fn": lambda s, d: None} if action_cls is CustomFileAction else {}
+    action = action_cls(id="x", input_id="src", output_id="dst", registry=registry, **kwargs)
+    with pytest.raises(ValueError, match="works on local files only; 's3a://bucket/landing' is on a remote store"):
+        action.init(None, [])

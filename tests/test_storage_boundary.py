@@ -1,6 +1,7 @@
-"""The file DataObjects reach storage on the driver only through `fs`: the
-modules below use no file-system module or `os` call of their own, so a
-plain path, a `file:` URI and a Hadoop store take the same code path.
+"""The file DataObjects, and CopyAction's delete of its input, reach storage
+on the driver only through `fs`: the modules below use no file-system module
+or `os` call of their own, so a plain path, a `file:` URI and a Hadoop store
+take the same code path.
 
 Two helpers stay local-only, because their libraries read local files:
 zip packaging (`zipfile`) and parquet footer row counts (`pyarrow`). They
@@ -12,8 +13,8 @@ import pathlib
 
 import pytest
 
-DATAOBJECTS = pathlib.Path(__file__).resolve().parent.parent / "smart_data_lake_spark" / "dataobjects"
-GUARDED = ["file.py", "table.py"]
+PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "smart_data_lake_spark"
+GUARDED = ["dataobjects/file.py", "dataobjects/table.py", "actions/copy.py"]
 FORBIDDEN_MODULES = {"glob", "shutil", "tempfile"}
 FORBIDDEN_CALLS = {
     "os.walk",
@@ -69,9 +70,9 @@ def violations(source: str) -> list[str]:
     return found
 
 
-@pytest.mark.parametrize("module", GUARDED)
+@pytest.mark.parametrize("module", GUARDED, ids=lambda m: m.split("/")[-1])
 def test_file_dataobjects_touch_storage_only_through_fs(module):
-    assert violations((DATAOBJECTS / module).read_text()) == []
+    assert violations((PACKAGE / module).read_text()) == []
 
 
 def test_guard_detects_bypasses():
