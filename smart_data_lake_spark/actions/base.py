@@ -626,5 +626,33 @@ class DataFrameAction(Action):
         return SparkSubFeed(data_object_id=out_id, metrics=self.runtime_metrics.get(out_id, {}))
 
 
+class PrimaryKeyOutput:
+    """The primary key of an action's single output table, which
+    HistorizeAction and DeduplicateAction merge and deduplicate by."""
+
+    def _validate_pk_early(self) -> None:
+        """Fail at CONSTRUCTION when the output table declares no primary key
+        (HistorizeActionTest / DeduplicateActionTest 'early validation that
+        output primary key exists' — the reference intercepts at the
+        constructor, not first exec). Only enforced when the registry can
+        already resolve the output; config-driven construction always can."""
+        try:
+            out_do = self._do(self.output_id)
+        except Exception:  # noqa: BLE001 — DO registered later: exec re-checks
+            return
+        table = getattr(out_do, "table", None)
+        if table is not None and not table.primary_key:
+            raise ValueError(
+                f"({self.id}) output table of {type(self).__name__} needs a primary key"
+            )
+
+    def _pks(self) -> list[str]:
+        out_do = self._do(self.output_id)
+        table = getattr(out_do, "table", None)
+        if table is None or not table.primary_key:
+            raise ValueError(f"({self.id}) output DataObject needs a primary key")
+        return table.primary_key
+
+
 def now_utc() -> datetime.datetime:
     return datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from smart_data_lake_spark.config import register_action_type
-from smart_data_lake_spark.actions.base import DataFrameAction, now_utc
+from smart_data_lake_spark.actions.base import DataFrameAction, PrimaryKeyOutput, now_utc
 from smart_data_lake_spark.dataobjects.base import CanMergeDataFrame
 from smart_data_lake_spark.historization import TS_CAPTURED, _attr_cols, deduplicate_keep_latest
 from smart_data_lake_spark.save_modes import SaveMode
@@ -24,7 +24,7 @@ from smart_data_lake_spark.transformers.df_transformers import DfTransformer, ap
 
 
 @register_action_type
-class DeduplicateAction(DataFrameAction):
+class DeduplicateAction(PrimaryKeyOutput, DataFrameAction):
     def __init__(
         self,
         id: str,
@@ -47,22 +47,6 @@ class DeduplicateAction(DataFrameAction):
         self.reference_timestamp = reference_timestamp
         self._validate_pk_early()
 
-    def _validate_pk_early(self) -> None:
-        """Fail at CONSTRUCTION when the output table declares no primary key
-        (DeduplicateActionTest 'early validation that output primary key
-        exists' — the reference intercepts at the constructor, not first
-        exec). Only enforced when the registry can already resolve the
-        output; config-driven construction always can."""
-        try:
-            out_do = self._do(self.output_id)
-        except Exception:  # noqa: BLE001 — DO registered later: exec re-checks
-            return
-        table = getattr(out_do, "table", None)
-        if table is not None and not table.primary_key:
-            raise ValueError(
-                f"({self.id}) output table of {type(self).__name__} needs a primary key"
-            )
-
     @property
     def input_ids(self) -> list[str]:
         return [self.input_id]
@@ -70,13 +54,6 @@ class DeduplicateAction(DataFrameAction):
     @property
     def output_ids(self) -> list[str]:
         return [self.output_id]
-
-    def _pks(self) -> list[str]:
-        out_do = self._do(self.output_id)
-        table = getattr(out_do, "table", None)
-        if table is None or not table.primary_key:
-            raise ValueError(f"({self.id}) output DataObject needs a primary key")
-        return table.primary_key
 
     def transform(self, spark: SparkSession, dfs: dict[str, DataFrame]) -> dict[str, DataFrame]:
         df = apply_df_transformers(

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from smart_data_lake_spark.config import register_action_type
-from smart_data_lake_spark.actions.base import DataFrameAction, now_utc
+from smart_data_lake_spark.actions.base import DataFrameAction, PrimaryKeyOutput, now_utc
 from smart_data_lake_spark.historization import (
     HASH_COL,
     HIGH_TS,
@@ -34,7 +34,7 @@ from smart_data_lake_spark.transformers.df_transformers import DfTransformer, ap
 
 
 @register_action_type
-class HistorizeAction(DataFrameAction):
+class HistorizeAction(PrimaryKeyOutput, DataFrameAction):
     def __init__(
         self,
         id: str,
@@ -65,21 +65,6 @@ class HistorizeAction(DataFrameAction):
         self.reference_timestamp = reference_timestamp
         self._validate_pk_early()
 
-    def _validate_pk_early(self) -> None:
-        """Fail at CONSTRUCTION when the output table declares no primary key
-        (HistorizeActionTest 'early validation that output primary key
-        exists'). Only enforced when the registry can already resolve the
-        output; exec re-checks otherwise."""
-        try:
-            out_do = self._do(self.output_id)
-        except Exception:  # noqa: BLE001
-            return
-        table = getattr(out_do, "table", None)
-        if table is not None and not table.primary_key:
-            raise ValueError(
-                f"({self.id}) output table of {type(self).__name__} needs a primary key"
-            )
-
     @property
     def input_ids(self) -> list[str]:
         return [self.input_id]
@@ -87,13 +72,6 @@ class HistorizeAction(DataFrameAction):
     @property
     def output_ids(self) -> list[str]:
         return [self.output_id]
-
-    def _pks(self) -> list[str]:
-        out_do = self._do(self.output_id)
-        table = getattr(out_do, "table", None)
-        if table is None or not table.primary_key:
-            raise ValueError(f"({self.id}) output DataObject needs a primary key")
-        return table.primary_key
 
     def transform(self, spark: SparkSession, dfs: dict[str, DataFrame]) -> dict[str, DataFrame]:
         df = apply_df_transformers(

@@ -21,6 +21,7 @@ import itertools
 import os
 import re
 import threading
+import uuid
 from typing import Any
 
 from py4j.protocol import Py4JJavaError
@@ -39,7 +40,7 @@ from smart_data_lake_spark.dataobjects.base import (
     DataObject,
     _parse_schema,
 )
-from smart_data_lake_spark.fs import LocalFileSystem, get_fs, strip_local_scheme
+from smart_data_lake_spark.fs import LocalFileSystem, delete_empty_parent_paths, get_fs, strip_local_scheme
 from smart_data_lake_spark.partitions import PartitionValues, apply_partition_filter
 from smart_data_lake_spark.save_modes import SaveMode
 
@@ -61,6 +62,31 @@ _READ_SCHEMAS_LOCK = threading.Lock()
 _LISTED_FILES_MAX = 1_000
 _LISTED_TARGETS_MAX = 32
 _GLOB_CHARS = re.compile(r"[*?\[{]")
+
+
+#: save mode -> (Spark write mode, what the write replaces once its job has
+#: committed). "dynamic" is Spark's dynamic partition overwrite, a static
+#: overwrite on an unpartitioned object. _OBJECT: the files of the declared
+#: partitions; without them the whole object, staged and swapped in, or on a
+#: partitioned object only the partitions the dynamic overwrite writes.
+#: _FILES: the files of the declared partitions or of the whole object,
+#: directories kept.
+_OBJECT, _FILES = "object", "files"
+_WRITE_MODES = {
+    SaveMode.OVERWRITE: ("dynamic", _OBJECT),
+    SaveMode.OVERWRITE_OPTIMIZED: ("append", _OBJECT),
+    SaveMode.OVERWRITE_PRESERVE_DIRECTORIES: ("append", _FILES),
+    SaveMode.APPEND: ("append", None),
+    SaveMode.ERROR_IF_EXISTS: ("error", None),
+    SaveMode.IGNORE: ("ignore", None),
+}
+
+
+def _files_under(fs, root: str) -> list[str]:
+    """Sorted paths, in the form of `root`, of every non-hidden file under
+    it (or of `root` itself when it is a file)."""
+    root = root.rstrip("/")
+    return sorted(root if rel == "." else f"{root}/{rel}" for rel, _, _ in fs.file_stats(root))
 
 
 class NoDataToProcessError(Exception):
@@ -291,13 +317,7 @@ class SparkFileDataObject(
         return fs.exists(self.path) and all(size == 0 for _, size, _ in fs.file_stats(self.path))
 
     def _data_files(self, spark: SparkSession | None) -> list[str]:
-        """Sorted paths, in the form of `self.path`, of every non-hidden file
-        under it (or of the path itself when it is a file)."""
-        root = self.path.rstrip("/")
-        return sorted(
-            root if rel == "." else f"{root}/{rel}"
-            for rel, _, _ in get_fs(spark, root).file_stats(root)
-        )
+        return _files_under(get_fs(spark, self.path), self.path)
 
     def get_dataframe_for_files(
         self, spark: SparkSession, files: list[str]
@@ -480,69 +500,103 @@ class SparkFileDataObject(
         partition_values: list[PartitionValues] | None = None,
         save_mode: SaveMode | None = None,
     ) -> dict[str, Any]:
-        mode = save_mode or self.save_mode
         self.init_write(df, partition_values)
-        df = self._repartition_for_write(df)
-        writer, obs = self._observed_writer(df)
+        return self._write_replacing(self._repartition_for_write(df), save_mode or self.save_mode, partition_values)
+
+    def _write_replacing(
+        self,
+        df: DataFrame,
+        mode: SaveMode,
+        partition_values: list[PartitionValues] | None,
+        whole_object: bool = False,
+    ) -> dict[str, Any]:
+        """The one write path of file DataObjects, for every save mode (the
+        reference's SparkFileDataObject.scala:493-552): `_WRITE_MODES` gives the
+        Spark write mode and what the write replaces. Nothing committed is
+        deleted, moved or emptied before the write job has committed, so a
+        failed job leaves the object as it was. `whole_object` replaces the
+        whole object whatever its partitions (a table's MERGE rewrite)."""
+        if mode == SaveMode.MERGE:
+            raise ValueError(f"({self.id}) SaveMode.MERGE requires a table DataObject")
         fs = get_fs(df.sparkSession, self.path)
-        if mode == SaveMode.OVERWRITE_PRESERVE_DIRECTORIES:
-            # delete file contents but keep the directory tree (ACLs/mounts on
-            # real filesystems survive, SDLSaveMode.scala OverwritePreserveDirectories)
-            targets = (
-                [os.path.join(self.path, pv.hive_path()) for pv in partition_values]
-                if (partition_values and self.partitions)
-                else [self.path]
+        spark_mode, replaces = _WRITE_MODES[mode]
+        declared = (partition_values or []) if self.partitions else []
+        if mode == SaveMode.OVERWRITE_OPTIMIZED and self.partitions and not declared:
+            # without partition values OverwriteOptimized would silently
+            # become a whole-object overwrite (SparkFileDataObject.scala:505-511)
+            raise ProcessingLogicError(
+                f"({self.id}) OverwriteOptimized without partition values "
+                "is not allowed for a partitioned DataObject"
             )
-            for target in targets:
-                self._delete_files_keep_dirs(target, fs)
-            writer.mode("append").save(self.path)
-        elif mode == SaveMode.OVERWRITE_OPTIMIZED:
-            # delete only the affected partitions then append
-            if partition_values:
-                self.delete_partitions(df.sparkSession, partition_values)
-                writer.mode("append").save(self.path)
-            elif self.partitions:
-                # the whole point of OverwriteOptimized is partition-scoped
-                # deletes; without partition values it would silently become a
-                # whole-object overwrite (SparkFileDataObject.scala:505-511)
-                raise ProcessingLogicError(
-                    f"({self.id}) OverwriteOptimized without partition values "
-                    "is not allowed for a partitioned DataObject"
-                )
-            else:
-                writer.mode("overwrite").save(self.path)
-        elif mode == SaveMode.OVERWRITE and self.partitions and partition_values:
-            # declared-partition overwrite: every *declared* partition is
-            # replaced, including ones the DataFrame carries no rows for —
-            # an empty declared partition ends up emptied, not kept
-            # (SparkFileDataObject.scala:525-536). Still dynamic underneath so
-            # undeclared partitions in the data are also replaced, not doubled.
-            self.delete_partitions(df.sparkSession, partition_values)
-            writer.mode("overwrite").option("partitionOverwriteMode", "dynamic").save(self.path)
-        elif mode == SaveMode.OVERWRITE and self.partitions:
-            # dynamic partition overwrite replaces only written partitions
-            writer.mode("overwrite").option("partitionOverwriteMode", "dynamic").save(self.path)
+        if replaces == _OBJECT and (whole_object or not self.partitions):
+            metrics = self._swap_in(fs, lambda staging: self._write(df, staging, spark_mode))
         else:
-            spark_mode = {
-                SaveMode.OVERWRITE: "overwrite",
-                SaveMode.APPEND: "append",
-                SaveMode.ERROR_IF_EXISTS: "error",
-                SaveMode.IGNORE: "ignore",
-                SaveMode.MERGE: None,
-            }[mode]
-            if spark_mode is None:
-                raise ValueError(f"({self.id}) SaveMode.MERGE requires a table DataObject")
-            writer.mode(spark_mode).save(self.path)
-        if self.partitions and partition_values:
+            # the files the write replaces: those of the declared partitions
+            # (a declared partition without rows ends up empty,
+            # SparkFileDataObject.scala:525-536), or for
+            # OverwritePreserveDirectories without them every file
+            targets = [d for pv in declared for d in self._partition_dirs(df.sparkSession, pv)] if replaces else []
+            if replaces == _FILES and not declared:
+                targets = [self.path]
+            listed = [(t, f) for t in targets for f in _files_under(fs, t)]
+            metrics = self._write(df, self.path, spark_mode)
+            for target, f in listed:
+                if fs.exists(f):  # not replaced by the job itself
+                    fs.delete(f)
+                    fs.delete(f"{os.path.dirname(f)}/.{os.path.basename(f)}.crc")
+                    if replaces != _FILES:  # OverwritePreserveDirectories keeps the tree
+                        delete_empty_parent_paths(fs, f, target)
+        for pv in declared:
             # materialize declared-but-empty partitions so listPartitions
             # reflects the write plan, not just the data that happened to be
             # present (createMissingPartitions, CanHandlePartitions.scala:77-84)
-            for pv in partition_values:
-                fs.mkdirs(os.path.join(self.path, pv.hive_path()))
+            fs.mkdirs(self._partition_dirs(df.sparkSession, pv)[0])
         self.persist_schema(df)
         self._rename_output_files(fs)
         self._apply_acl(df.sparkSession)
+        return metrics
+
+    def _write(self, df: DataFrame, path: str, spark_mode: str) -> dict[str, Any]:
+        """Run the write job of `df` into `path`; `spark_mode` is a Spark save
+        mode or "dynamic", Spark's dynamic partition overwrite, which stages
+        the files and replaces the partitions it wrote only at commit."""
+        writer, obs = self._observed_writer(df)
+        if spark_mode == "dynamic":
+            writer = writer.option("partitionOverwriteMode", "dynamic")
+        writer.mode("overwrite" if spark_mode == "dynamic" else spark_mode).save(path)
         return dict(obs.get)
+
+    def _swap_in(self, fs, write) -> dict[str, Any]:
+        """Whole-object replace in the manner of TickTockHiveTableDataObject
+        .scala:44: `write` stages the new object into a sibling directory;
+        once it has committed, the live directory moves aside to a second
+        sibling, the staged one moves in, and only then `_retire` takes the
+        aside copy. If that second move fails, the aside copy moves back. On
+        an object store a move copies the data; deploy Delta or Iceberg there."""
+        parent = os.path.dirname(self.path.rstrip("/")) or "."
+        token = uuid.uuid4().hex
+        staging, aside = (f"{parent}/.sdl_{self.id}_{kind}_{token}" for kind in ("staging", "aside"))
+        try:
+            metrics = write(staging)
+            live = fs.exists(self.path)
+            if live:
+                fs.move(self.path, aside)
+            try:
+                fs.move(staging, self.path)
+            except BaseException:
+                if live:
+                    fs.move(aside, self.path)
+                raise
+        finally:
+            if fs.exists(staging):
+                fs.delete(staging, recursive=True)
+        if live:
+            self._retire(fs, aside)
+        return metrics
+
+    def _retire(self, fs, aside: str) -> None:
+        """Dispose of the copy a whole-object swap replaced."""
+        fs.delete(aside, recursive=True)
 
     def _observed_writer(self, df: DataFrame) -> tuple[DataFrameWriter, Observation]:
         """Writer for `df` with this object's format, options and partition
@@ -689,10 +743,13 @@ class SparkFileDataObject(
         for f in fs.walk_files(base):
             fs.delete(f)
 
+    def _partition_dirs(self, spark: SparkSession, pv: PartitionValues) -> list[str]:
+        """The directories that can hold partition `pv`; new files go to the first."""
+        return [os.path.join(self.path, pv.hive_path())]
+
     def delete_partitions(self, spark: SparkSession, partition_values: list[PartitionValues]) -> None:
         fs = get_fs(spark, self.path)
-        for pv in partition_values:
-            target = os.path.join(self.path, pv.hive_path())
+        for target in (d for pv in partition_values for d in self._partition_dirs(spark, pv)):
             if fs.is_dir(target):
                 fs.delete(target, recursive=True)
 
@@ -1107,9 +1164,9 @@ class AvroFileDataObject(SparkFileDataObject):
     per-partition container write, cross-verified against the Apache Avro
     Java implementation in tests. The fallback writes Hive-layout partition
     directories (partition columns dropped from the payload, recovered from
-    the path on read) and overwrite modes delete ONLY the affected
-    partitions — dynamic-partition-overwrite parity with the native path.
-    Partition values are %-encoded in directory names; values needing
+    the path on read) and replaces only its own `_write`: the save-mode
+    and scope decisions, and what a failed write leaves, are the native
+    path's. Partition values are %-encoded in directory names; values needing
     escaping beyond Hive's plain `col=value` form are an accepted edge for
     the overwrite-delete match."""
 
@@ -1129,82 +1186,46 @@ class AvroFileDataObject(SparkFileDataObject):
             df = df.withColumn(self.filename_column, F.input_file_name())
         return df
 
-    def write_dataframe(
-        self,
-        df: DataFrame,
-        partition_values: list[PartitionValues] | None = None,
-        save_mode: SaveMode | None = None,
-    ) -> dict[str, Any]:
+    def _write(self, df: DataFrame, path: str, spark_mode: str) -> dict[str, Any]:
         spark = df.sparkSession
         if _native_avro_available(spark):
-            return super().write_dataframe(df, partition_values, save_mode)
+            return super()._write(df, path, spark_mode)
         import secrets
 
         from smart_data_lake_spark.dataobjects.avro_ocf import write_avro
 
-        mode = save_mode or self.save_mode
-        self.init_write(df, partition_values)
-        df = self._repartition_for_write(df)
-        fs = get_fs(spark, self.path)
-        if mode in (SaveMode.ERROR_IF_EXISTS, SaveMode.IGNORE) and self.exists(spark):
-            if mode == SaveMode.IGNORE:
+        fs = get_fs(spark, path)
+        if spark_mode in ("error", "ignore") and any(fs.file_stats(path)):
+            if spark_mode == "ignore":
                 return {"records_written": 0, "no_data": True}
-            raise FileExistsError(f"({self.id}) {self.path} already exists")
-        dynamic_overwrite = False
-        if mode in (SaveMode.OVERWRITE, SaveMode.OVERWRITE_OPTIMIZED) and fs.is_dir(self.path):
-            if not self.partitions:
-                fs.delete(self.path, recursive=True)
-            elif partition_values and mode == SaveMode.OVERWRITE_OPTIMIZED:
-                # overwrite only the named partitions (parent's
-                # OverwriteOptimized contract) — never the whole layout
-                self.delete_partitions(spark, partition_values)
-            else:
-                # dynamic-partition-overwrite parity: replace exactly the
-                # partitions present in df. The written-dirs manifest from
-                # the write itself drives the cleanup — never a second pass
-                # over the input lineage (r6 review finding)
-                dynamic_overwrite = True
-        elif mode == SaveMode.OVERWRITE_PRESERVE_DIRECTORIES and fs.is_dir(self.path):
-            targets = (
-                [os.path.join(self.path, pv.hive_path()) for pv in partition_values]
-                if (partition_values and self.partitions)
-                else [self.path]
-            )
-            for target in targets:
-                self._delete_files_keep_dirs(target, fs)
-        # unique prefix whenever new files can land NEXT TO existing ones
-        # (append, partial/dynamic overwrite of a partitioned layout) so this
-        # write can never clobber a surviving file from an earlier run
-        coexists = mode == SaveMode.APPEND or (bool(self.partitions) and mode != SaveMode.OVERWRITE_PRESERVE_DIRECTORIES)
-        prefix = f"part-{secrets.token_hex(4)}" if coexists else "part"
+            raise FileExistsError(f"({self.id}) {path} already exists")
+        # a prefix of this write's own: its files land next to existing ones,
+        # which it must never clobber
+        prefix = f"part-{secrets.token_hex(4)}"
         codec = self.options.get("compression", "deflate")
-        n = write_avro(df, self.path, codec=codec, prefix=prefix, partition_cols=self.partitions)
-        if dynamic_overwrite:
-            # replace exactly the partitions this write touched: drop files
-            # in those dirs that don't carry this write's prefix
-            for sub in getattr(n, "partition_dirs", []):
-                target = os.path.join(self.path, sub) if sub else self.path
-                if not fs.is_dir(target):
-                    continue
-                for fname in fs.listdir(target):
+        n = write_avro(df, path, codec=codec, prefix=prefix, partition_cols=self.partitions)
+        if spark_mode == "dynamic":
+            # dynamic-partition-overwrite parity: replace exactly the
+            # partitions this write touched. The written-dirs manifest from
+            # the write itself drives the cleanup, never a second pass over
+            # the input lineage
+            for sub in n.partition_dirs:
+                target = os.path.join(path, sub) if sub else path
+                for fname in fs.listdir(target) if fs.is_dir(target) else []:
                     if fname.endswith(".avro") and not fname.startswith(prefix):
                         fs.delete(os.path.join(target, fname))
         return {"records_written": int(n)}
 
-    def delete_partitions(self, spark: SparkSession, partition_values: list[PartitionValues]) -> None:
-        """Partition dirs are %-encoded by the fallback writer (read back via
-        url_decode); delete both the encoded and the plain form so an
-        overwrite of a value needing encoding never silently keeps old files
-        (r6 review finding)."""
+    def _partition_dirs(self, spark: SparkSession, pv: PartitionValues) -> list[str]:
+        """The fallback writer %-encodes partition values in directory names
+        (read back via url_decode), Spark's native writer does not: both
+        forms, the one this session's writer uses first, so an overwrite of a
+        value needing encoding never keeps old files."""
         from urllib.parse import quote
 
-        fs = get_fs(spark, self.path)
-        for pv in partition_values:
-            encoded = "/".join(f"{k}={quote(str(v), safe='')}" for k, v in pv.values)
-            for sub in {pv.hive_path(), encoded}:
-                target = os.path.join(self.path, sub)
-                if fs.is_dir(target):
-                    fs.delete(target, recursive=True)
+        encoded = "/".join(f"{k}={quote(str(v), safe='')}" for k, v in pv.values)
+        forms = [pv.hive_path(), encoded] if _native_avro_available(spark) else [encoded, pv.hive_path()]
+        return [os.path.join(self.path, sub) for sub in dict.fromkeys(forms)]
 
 
 @register_data_object_type

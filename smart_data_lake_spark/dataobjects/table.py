@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import os
 import threading
-import uuid
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -102,14 +101,6 @@ class ParquetTableDataObject(SparkFileDataObject, CanMergeDataFrame):
         mode = save_mode or self.save_mode
         if mode == SaveMode.MERGE:
             return self.merge_dataframe_by_primary_key(df, merge_options)
-        if mode == SaveMode.OVERWRITE and not self.partitions and self.exists(df.sparkSession):
-            # overwrite of an existing table whose current content may be an
-            # input of `df`'s plan (Historize/Deduplicate read-modify-write):
-            # Spark refuses "cannot overwrite a path that is also being read
-            # from", so stage to a temp dir and swap. Partitioned tables keep
-            # the dynamic-partition-overwrite path (only written partitions
-            # are replaced — atomic rewrite would drop the untouched ones).
-            return self._atomic_rewrite(df)
         return super().write_dataframe(df, partition_values, mode)
 
     def merge_dataframe_by_primary_key(
@@ -124,33 +115,9 @@ class ParquetTableDataObject(SparkFileDataObject, CanMergeDataFrame):
             # (condition + ignored columns + overrides) to the source alone
             return super().write_dataframe(apply_insert_semantics(df, opts), None, SaveMode.OVERWRITE)
         result = merge_dataframes(self.get_dataframe(spark), df, self.primary_key, opts)
-        return self._atomic_rewrite(result)
-
-    def _atomic_rewrite(self, df: DataFrame) -> dict[str, Any]:
-        """Write-to-temp + swap: a poor man's transaction for plain parquet
-        (analogous to TickTockHiveTableDataObject.scala:44's alternating
-        storage paths). Delta/Iceberg replace this with real ACID commits.
-        All FS ops go through the fs abstraction, so the same code runs on
-        local disk (os/shutil) or a Hadoop-compatible store (rename-based
-        swap; note object stores make rename O(data) — deploy Delta/Iceberg
-        there, which is why MERGE prefers those DataObjects). The temp dir is
-        a uuid-named sibling of the table on every store."""
-        fs = get_fs(df.sparkSession, self.path)
-        parent = os.path.dirname(self.path.rstrip("/")) or "."
-        tmp = f"{parent}/sdl_{self.id}_tmp_{uuid.uuid4().hex}"
-        try:
-            writer, obs = self._observed_writer(df)
-            writer.mode("overwrite").save(tmp)
-            if fs.is_dir(self.path):
-                if self.keep_snapshots > 0:
-                    self._snapshot_current(fs)
-                else:
-                    fs.delete(self.path, recursive=True)
-            fs.move(tmp, self.path)
-            return dict(obs.get)
-        finally:
-            if fs.is_dir(tmp):
-                fs.delete(tmp, recursive=True)
+        # the result reads the live table: a whole-object swap, never a
+        # delete before the job (Delta/Iceberg replace this with a commit)
+        return self._write_replacing(result, SaveMode.OVERWRITE, None, whole_object=True)
 
     # -- snapshot retention / time travel ---------------------------------
 
@@ -158,16 +125,18 @@ class ParquetTableDataObject(SparkFileDataObject, CanMergeDataFrame):
     def _snapshot_root(self) -> str:
         return self.path.rstrip("/") + "_snapshots"
 
-    def _snapshot_current(self, fs) -> None:
-        """Retire the live directory as the next snapshot version and prune
-        beyond `keep_snapshots`. Versions are monotonically increasing ints;
-        driver-side metadata ops only (one move + bounded deletes)."""
+    def _retire(self, fs, aside: str) -> None:
+        """With `keep_snapshots`, the replaced table becomes the next
+        snapshot version and versions beyond `keep_snapshots` are pruned.
+        Versions are monotonically increasing ints; driver-side metadata ops
+        only (one move + bounded deletes)."""
+        if self.keep_snapshots <= 0:
+            return super()._retire(fs, aside)
         existing = self.snapshot_versions(fs)
         nxt = (existing[-1] + 1) if existing else 0
-        if not fs.is_dir(self._snapshot_root):
-            fs.mkdirs(self._snapshot_root)
-        fs.move(self.path, f"{self._snapshot_root}/v{nxt}")
-        for v in (existing + [nxt])[: -self.keep_snapshots] if self.keep_snapshots else []:
+        fs.mkdirs(self._snapshot_root)
+        fs.move(aside, f"{self._snapshot_root}/v{nxt}")
+        for v in (existing + [nxt])[: -self.keep_snapshots]:
             fs.delete(f"{self._snapshot_root}/v{v}", recursive=True)
 
     def snapshot_versions(self, fs=None) -> list[int]:
@@ -281,6 +250,8 @@ class HiveTableDataObject(ParquetTableDataObject):
         else:
             metrics = super().write_dataframe(df, partition_values, save_mode, merge_options)
             name = self.table.full_name
+            # a scheme-qualified path (file:, s3a:, ...) is already absolute
+            location = self.path if ":" in self.path.split("/", 1)[0] else os.path.abspath(self.path)
             if self.partitions:
                 # partitioned external table needs explicit column DDL +
                 # PARTITIONED BY, then partition discovery. MSCK rescans the
@@ -296,13 +267,13 @@ class HiveTableDataObject(ParquetTableDataObject):
                 spark.sql(
                     f"CREATE TABLE IF NOT EXISTS {name} ({cols_ddl}) USING PARQUET "
                     f"PARTITIONED BY ({', '.join(self.partitions)}) "
-                    f"LOCATION '{os.path.abspath(self.path)}'"
+                    f"LOCATION '{location}'"
                 )
                 spark.sql(f"MSCK REPAIR TABLE {name}")
             else:
                 spark.sql(
                     f"CREATE TABLE IF NOT EXISTS {name} "
-                    f"USING PARQUET LOCATION '{os.path.abspath(self.path)}'"
+                    f"USING PARQUET LOCATION '{location}'"
                 )
             spark.sql(f"REFRESH TABLE {name}")
         if self.analyze_table_after_write:

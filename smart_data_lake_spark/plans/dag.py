@@ -14,6 +14,8 @@ from __future__ import annotations
 import datetime
 import json
 import os
+import re
+import threading
 import time
 from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
@@ -66,8 +68,13 @@ class StateStore:
         return os.path.join(self.state_path, f"{self.app_name}_run{run_id}_attempt{attempt_id}.json")
 
     def save(self, state: RunState) -> None:
-        with open(self._file(state.run_id, state.attempt_id), "w") as f:
+        # a temporary name that `latest` never reads, then an atomic rename:
+        # a kill mid-save leaves the previous state files intact
+        target = self._file(state.run_id, state.attempt_id)
+        tmp_path = f"{target}.{os.getpid()}-{threading.get_ident()}.tmp"
+        with open(tmp_path, "w") as f:
             f.write(state.to_json())
+        os.replace(tmp_path, target)
         if state.is_final:
             # one summary line per FINAL state into index.jsonl — the fast
             # listing a dashboard reads instead of parsing every state file
@@ -112,13 +119,14 @@ class StateStore:
                 os.replace(tmp_path, index_path)
 
     def latest(self) -> RunState | None:
-        files = sorted(
-            (f for f in os.listdir(self.state_path) if f.endswith(".json")),
-            key=lambda f: os.path.getmtime(os.path.join(self.state_path, f)),
-        )
-        if not files:
+        """The state with the highest (run_id, attempt_id), as SDLExecutionId
+        orders them, parsed from this store's own file names: file mtimes
+        can tie (a restore, a coarse clock) and say nothing about the order."""
+        name = re.compile(rf"{re.escape(self.app_name)}_run(\d+)_attempt(\d+)\.json")
+        ids = [tuple(map(int, m.groups())) for m in map(name.fullmatch, os.listdir(self.state_path)) if m]
+        if not ids:
             return None
-        with open(os.path.join(self.state_path, files[-1])) as f:
+        with open(self._file(*max(ids))) as f:
             return RunState.from_json(f.read())
 
 

@@ -409,3 +409,76 @@ def test_avro_dynamic_overwrite_replaces_appended_files(spark, tmp_path):
                        save_mode=SaveMode.OVERWRITE)
     rows = {(r["id"], r["p"]) for r in do.get_dataframe(spark).collect()}
     assert rows == {(7, "x"), (2, "y")}
+
+
+def test_avro_fallback_failed_overwrite_keeps_committed_rows(spark, tmp_path):
+    """The fallback deletes nothing before `write_avro` returns: a frame that
+    fails inside the write job leaves every committed row, for an
+    unpartitioned OVERWRITE and for a partitioned OVERWRITE_OPTIMIZED."""
+    from pyspark.sql import functions as F
+
+    from smart_data_lake_spark.dataobjects.file import AvroFileDataObject
+    from smart_data_lake_spark.partitions import PartitionValues
+    from smart_data_lake_spark.save_modes import SaveMode
+
+    bad = spark.range(10, 12).select(
+        F.when(F.col("id") > 0, F.raise_error(F.lit("boom"))).otherwise(F.col("id")).cast("int").alias("id"),
+        F.lit("a").alias("dt"),
+    )
+    old = spark.createDataFrame([(1, "a"), (2, "a"), (3, "b")], "id int, dt string")
+    flat = AvroFileDataObject(id="avf", path=str(tmp_path / "flat"))
+    flat.write_dataframe(old)
+    with pytest.raises(Exception, match="boom"):
+        flat.write_dataframe(bad, save_mode=SaveMode.OVERWRITE)
+    assert sorted(r["id"] for r in flat.get_dataframe(spark).collect()) == [1, 2, 3]
+    part = AvroFileDataObject(id="avpf", path=str(tmp_path / "part"), partitions=["dt"])
+    part.write_dataframe(old)
+    with pytest.raises(Exception, match="boom"):
+        part.write_dataframe(bad, [PartitionValues.of({"dt": "a"})], save_mode=SaveMode.OVERWRITE_OPTIMIZED)
+    assert sorted(r["id"] for r in part.get_dataframe(spark).collect()) == [1, 2, 3]
+
+
+def test_avro_fallback_overwrite_optimized_requires_partition_values(spark, tmp_path):
+    """As on the native path (SparkFileDataObject.scala:505-511), not a
+    silent dynamic overwrite."""
+    from smart_data_lake_spark.dataobjects.file import AvroFileDataObject, ProcessingLogicError
+    from smart_data_lake_spark.save_modes import SaveMode
+
+    do = AvroFileDataObject(id="avopt", path=str(tmp_path / "t"), partitions=["dt"])
+    df = spark.createDataFrame([(1, "a")], "id int, dt string")
+    do.write_dataframe(df)
+    with pytest.raises(ProcessingLogicError):
+        do.write_dataframe(df, partition_values=[], save_mode=SaveMode.OVERWRITE_OPTIMIZED)
+    assert do.get_dataframe(spark).count() == 1
+
+
+def test_avro_declared_partition_dir_uses_the_active_writers_form(spark, tmp_path, monkeypatch):
+    """A declared-but-empty partition is created in the directory form of the
+    writer in use: %-encoded for the fallback, Spark's plain `col=value` for
+    native spark-avro, so it never becomes a spurious sibling partition."""
+    from smart_data_lake_spark.dataobjects import file as file_mod
+    from smart_data_lake_spark.partitions import PartitionValues
+
+    do = file_mod.AvroFileDataObject(id="avdirs", path=str(tmp_path / "t"), partitions=["dt"])
+    pv = PartitionValues.of({"dt": "a b"})
+    monkeypatch.setattr(file_mod, "_native_avro_available", lambda s: False)
+    assert do._partition_dirs(spark, pv) == [str(tmp_path / "t" / "dt=a%20b"), str(tmp_path / "t" / "dt=a b")]
+    monkeypatch.setattr(file_mod, "_native_avro_available", lambda s: True)
+    assert do._partition_dirs(spark, pv) == [str(tmp_path / "t" / "dt=a b"), str(tmp_path / "t" / "dt=a%20b")]
+
+
+def test_native_avro_declared_empty_partition_with_escaped_value(spark, tmp_path):
+    """Native spark-avro writes `dt=a b`; declaring the empty partition
+    `dt=c d` next to it adds exactly one partition, in the same form."""
+    from smart_data_lake_spark.dataobjects.file import AvroFileDataObject, _native_avro_available
+    from smart_data_lake_spark.partitions import PartitionValues
+    from smart_data_lake_spark.save_modes import SaveMode
+
+    if not _native_avro_available(spark):
+        pytest.skip("spark-avro is not deployed")
+    do = AvroFileDataObject(id="avnat", path=str(tmp_path / "t"), partitions=["dt"])
+    df = spark.createDataFrame([(1, "a b")], "id int, dt string")
+    do.write_dataframe(df, [PartitionValues.of({"dt": "a b"}), PartitionValues.of({"dt": "c d"})],
+                       save_mode=SaveMode.OVERWRITE)
+    assert sorted(n for n in os.listdir(tmp_path / "t") if not n.startswith(("_", "."))) == ["dt=a b", "dt=c d"]
+    assert sorted(pv.hive_path() for pv in do.list_partitions(spark)) == ["dt=a b", "dt=c d"]

@@ -156,3 +156,21 @@ def test_file_actions_reject_a_remote_store(action_cls):
     action = action_cls(id="x", input_id="src", output_id="dst", registry=registry, **kwargs)
     with pytest.raises(ValueError, match="works on local files only; 's3a://bucket/landing' is on a remote store"):
         action.init(None, [])
+
+
+def test_external_hive_table_at_file_uri_registers_its_location(spark, tmp_path):
+    """The LOCATION of an external table at a `file://` path is that URI,
+    not `<cwd>/file:/...`: the plain path and the URI give the same table."""
+    from smart_data_lake_spark.dataobjects import HiveTableDataObject
+
+    counts = {}
+    for form in ("plain", "file_uri"):
+        name = f"uri_hive_{form}"
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        do = HiveTableDataObject(
+            id=name, path=FORMS[form] + str(tmp_path / name), table={"name": name}
+        )
+        do.write_dataframe(spark.createDataFrame([Row(k=1), Row(k=2)]))
+        counts[form] = spark.table(name).count()
+        spark.sql(f"DROP TABLE {name}")
+    assert counts == {"plain": 2, "file_uri": 2}
